@@ -41,8 +41,8 @@ def main(sf_dir, out_dir):
     con = duckdb.connect()
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         t = os.path.basename(p)[:-len(".parquet")]
-        # ScaleUp-generated rehearsal dirs (target/sf1, sf3) hold each
-        # table as a DIRECTORY of part files; driver testdata is one file
+        # a table may be a DIRECTORY of part files (Spark-written
+        # rehearsal dirs); driver testdata is one file
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))

@@ -47,44 +47,12 @@ object GraftSession {
     spark
   }
 
-  /** Core count a master string implies — `local[N]` is N, `local[*]`
-    * and anything non-local read the machine (the same default Spark
-    * itself uses for local mode). Exposed for the spec. */
-  private[graft] def coresFor(master: String): Int = {
-    val m = "local\\[(\\d+)\\]".r
-    master match {
-      case m(n) => n.toInt
-      case _    => Runtime.getRuntime.availableProcessors()
-    }
-  }
-
-  /** Standalone entry point for a pure-SQL user: build a session wired
-    * with [[GraftExtensions]] (native `graft_dot`/`graft_cosine`) and
-    * the engine's confs, with views over `dir` ready to query.
-    *
-    * Shuffle parallelism rides the SAME input-scaled full-wave rule as
-    * every measurement session ([[ToolSession.shufflePartitionsFor]]) —
-    * round-12 pinned 32 here while the tools got the rule, so a
-    * pure-SQL user at sf30+ inherited exactly the pin the round proved
-    * costs 13% on q140 and measured as a 1.5-1.7× straggler-wave
-    * hazard (r12 verdict ask). At ≤ sf10 inputs on 32 cores the rule
-    * floors at the same 32 the pin gave, so the committed geometry is
-    * bit-identical. */
-  def build(dir: String, master: String = "local[*]"): SparkSession = {
-    val parts = ToolSession.shufflePartitionsFor(
-      coresFor(master), ToolSession.dirBytes(dir))
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-sql")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    open(spark, dir)
-  }
+  /** Standalone entry point for a pure-SQL user: the one engine session
+    * ([[ToolSession.build]]: its confs and input-scaled shuffle
+    * parallelism) with the graft functions and views over `dir` ready
+    * to query. */
+  def build(dir: String): SparkSession =
+    open(ToolSession.build(dir, "graft-sql"), dir)
 
   /** One-shot: ensure views over `dir`, run `query`. */
   def sql(spark: SparkSession, dir: String, query: String): DataFrame =

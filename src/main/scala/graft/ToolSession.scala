@@ -2,13 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One session builder for every measurement entry point (Bench, QTime,
-  * ABTime, NearDupProbe) so they measure the SAME engine configuration —
-  * and the round-12 fix for the last single-box scale artifact: shuffle
-  * parallelism now scales with INPUT SIZE, not only with the core count.
+/** The one session builder: Bench, Verify, GraftSession and perfbench
+  * all run the SAME engine configuration. Shuffle parallelism scales
+  * with INPUT SIZE, not only with the core count.
   *
-  * Round-11 finding (VERDICT "what's wrong" #3): pinning
-  * `spark.sql.shuffle.partitions` to cpus (32) made q140's sf30
+  * Pinning `spark.sql.shuffle.partitions` to cpus (32) made q140's sf30
   * rehearsal read 5.96× for 3× data — each of the 32 sort partitions
   * grew superlinearly (sort is n·log n per partition, and past the
   * executor's memory fraction it spills, which is super-linear in
@@ -24,15 +22,13 @@ import org.apache.spark.sql.SparkSession
   *  - the floor keeps every catalog tier at exactly the committed
   *    geometry (sf0.1 = 17 MB, sf1 = 183 MB, sf3 = 563 MB → all 32, so
   *    committed bench artifacts and oracle hashes are untouched);
-  *  - whole waves only (the measured round-12 rule, :57-65): sf10
-  *    (2.1 GB) → 32 = unchanged; sf30 (6.4 GB) → 96 partitions, which
-  *    is where the q140 fix lands (measured in SCALE.md r12);
+  *  - whole waves only ([[shufflePartitionsFor]]): sf10 (2.1 GB) → 32 =
+  *    unchanged; sf30 (6.4 GB) → 96 partitions, which is where the q140
+  *    fix lands (measured in SCALE.md r12);
   *  - the 1024 cap bounds task-scheduling overhead on one box — past it
   *    a single machine is the wrong rehearsal rig anyway.
   *
-  * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides the rule exactly (the
-  * A/B instrument for the rule itself); `SPARK_GRAFT_CPUS` keeps its
-  * round-1 meaning.
+  * `SPARK_GRAFT_CPUS` sets the local core count (default 32).
   */
 object ToolSession {
 
@@ -60,8 +56,7 @@ object ToolSession {
     * 32-task wave plus ONE straggler with 31 cores idle — the
     * iteration-loop family, whose cost is stage-latency-dominated
     * (pagerank 9.6→14.4 s, modularity 22.6→38.2 s, link-prediction
-    * 14.6→21.1 s), paid ~2× per stage; ABTime reproduced the inflated
-    * numbers from the same rule. Rounding to whole waves removes the
+    * 14.6→21.1 s), paid ~2× per stage. Rounding to whole waves removes the
     * quantization while keeping the input scaling (sf10 → 32, sf30 →
     * 96). */
   def shufflePartitionsFor(cpus: Int, inputBytes: Long): Int = {
@@ -79,9 +74,7 @@ object ToolSession {
     * catalog) and input-scaled shuffle parallelism. */
   def build(sfDir: String, appName: String = "graft-tool"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt)
-      .getOrElse(shufflePartitionsFor(cpus.toInt, dirBytes(sfDir)))
+    val parts = shufflePartitionsFor(cpus.toInt, dirBytes(sfDir))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -98,14 +91,8 @@ object ToolSession {
       // with most of it dead (SCALE.md r12). 3 min keeps a measurement
       // session's transient footprint near its live working set; a
       // long-lived serving deployment sizes spark.local.dir instead.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "3min"))
-      // shuffle/spill IO codec, A/B-able per run (guide §2.3: zstd
-      // trades CPU for ~2× smaller shuffle transients — the same disk
-      // wall the periodicGC interval attacks; lz4 stays the default
-      // pending a measured win)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
+      .config("spark.cleaner.periodicGC.interval", "3min")
+      .config("spark.io.compression.codec", "lz4")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     System.err.println(f"[session] $appName sf=$sfDir cpus=$cpus " +

@@ -93,8 +93,6 @@ object Components {
       // count(), not isEmpty: materializes EVERY partition of the new
       // cache before the old one is dropped
       val moved = stepped.filter($"nlbl" < $"olbl").count()
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"[cc] round ${rounds + 1}: $moved moved")
       converged = moved == 0
       cached.unpersist()
       cached = stepped

@@ -375,15 +375,6 @@ object TxLog {
   /** Live file statistics — the skip-index a MERGE prunes with. */
   def files(table: String): Seq[AddFile] = liveFiles(replay(table))
 
-  /** Every data-* dir any commit references (adds or removes) — the
-    * complement, over the table's physical dirs, is the orphan set a
-    * [[vacuum]] is expected to reclaim. Exposed so integration tests
-    * (the soak) can assert vacuum reclaims EXACTLY the orphans. */
-  private[graft] def referencedDirs(table: String): Set[String] =
-    replay(table)
-      .flatMap(c => c.adds.map(_.path) ++ c.removes)
-      .map(_.split('/').head).toSet
-
   // -------------------------------------------------------- internals
 
   private def liveFiles(commits: Seq[Commit]): Seq[AddFile] = {

@@ -188,7 +188,8 @@ object AnalysisStream {
         // Idempotent under foreachBatch's at-least-once replay: each
         // micro-batch owns a partition directory keyed by batchId, so a
         // restarted batch OVERWRITES its own output instead of appending
-        // duplicates; SnapshotStore.update is last-write-wins.
+        // duplicates; SnapshotStore.update keeps the newer ts per sensor,
+        // and a replayed meta (equal ts) replaces itself.
         val metas = batch.collect().toSeq
         if (metas.nonEmpty) {
           spark.createDataset(metas)
@@ -209,23 +210,16 @@ object AnalysisStream {
     * Idempotent under foreachBatch's at-least-once replay: a restarted
     * batch re-merges identical rows, and MERGE by key is content-
     * idempotent (TxLogSpec); a re-analysis of the same (sensor, ts)
-    * snapshot is last-write-wins, exactly the CQL semantics. */
-  /** `updateSnapshot = false` runs this as the HISTORY stream of a
-    * two-stream topology — the reference's own split (Redis fast path
-    * via [[start]], Cassandra history via HistoryWriter): the fast
-    * stream owns the serving snapshot at its tighter cadence, and this
-    * stream owns the transactional record; letting both write the
-    * store would let the slower stream briefly regress a sensor to an
-    * older meta (ConcurrentHashMap.put is last-writer-wins, not
-    * max-ts-wins). */
+    * snapshot is last-write-wins, exactly the CQL semantics. Both
+    * streams may feed [[SnapshotStore]]: it keeps the newer `ts` per
+    * sensor, so the slower stream cannot regress a served reading. */
   def startTx(
       entryStream: Dataset[Entry],
       analysisTable: String,
       checkpointDir: String,
       recentN: Int = 200,
       scorer: String => Option[Double => Double] = _ => None,
-      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds"),
-      updateSnapshot: Boolean = true): StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery = {
     val spark = entryStream.sparkSession
     import spark.implicits._
     entryStream
@@ -242,7 +236,7 @@ object AnalysisStream {
         if (metas.nonEmpty) {
           graft.sources.TxLog.upsert(spark, analysisTable,
             spark.createDataset(metas).toDF(), Seq("name", "ts"))
-          if (updateSnapshot) SnapshotStore.update(metas)
+          SnapshotStore.update(metas)
         }
       }
       .trigger(trigger)
@@ -271,7 +265,12 @@ object DedupStream {
 object SnapshotStore {
   private val m = new java.util.concurrent.ConcurrentHashMap[String, SensorMeta]()
 
-  def update(metas: Seq[SensorMeta]): Unit = metas.foreach(x => m.put(x.name, x))
+  /** Keeps the meta with the newer `ts` per sensor, so the snapshot never
+    * goes back to an older reading; on an equal `ts` the incoming meta
+    * wins, so a replayed batch stays idempotent. */
+  def update(metas: Seq[SensorMeta]): Unit = metas.foreach { x =>
+    m.merge(x.name, x, (old, in) => if (in.ts.before(old.ts)) old else in)
+  }
   def get(sensor: String): Option[SensorMeta] = Option(m.get(sensor))
   def all: Seq[SensorMeta] = {
     import scala.jdk.CollectionConverters._

@@ -1,40 +1,10 @@
 package graft.tools
 
-import java.sql.Timestamp
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
-
-import org.apache.spark.sql.SparkSession
-
-import graft.core.SensorMeta
-import graft.operators.Anomaly
-import graft.sources.Tables
-import graft.streaming.{Serving, SnapshotStore}
-
-/** Serving-latency bench mirroring the reference load-test methodology
-  * (`hey -n 500 -c 10` against `/` and `/stress`, lambda-sample
-  * README.md:328-331, dashboard/Dashboard.scala:87-104):
-  *
-  *  - STRESS mode = serve the cached snapshot (reference `lastMeta`,
-  *    Analyzer.scala:117-121): 500 requests, concurrency 10, quartile
-  *    latencies — the box-plot metric of the reference dashboard.
-  *  - FULL mode = recompute the flagship analysis per request (the
-  *    reference `GET /` path): fewer requests, same metric.
-  *
-  * Prints one JSON line with quartiles in milliseconds.
-  */
+/** The serving SLA, shared by the specs and perfbench's `speed_serve`
+  * workload. */
 object ServeBench {
 
-  private def quartiles(xs: Seq[Double]): (Double, Double, Double, Double) = {
-    val s = xs.sorted
-    def q(p: Double) = s((p * (s.size - 1)).round.toInt)
-    (q(0.25), q(0.5), q(0.75), s.last)
-  }
-
-  /** Nearest-rank p99 — shared with ServingSpec so the test asserts the
-    * same percentile definition the bench reports. */
+  /** Nearest-rank p99, the percentile ServingSpec holds to [[SlaMillis]]. */
   private[graft] def p99(xs: Seq[Double]): Double = {
     val s = xs.sorted
     s((0.99 * (s.size - 1)).round.toInt)
@@ -44,63 +14,4 @@ object ServeBench {
     * timeout (BASELINE.md / lambda-sample Endpoint ask-timeout) — a p99
     * beyond it means requests the reference would have dropped. */
   val SlaMillis = 5000.0
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-
-    def fullAnalysis(): String = {
-      val entries = Tables.events(spark, sfDir).select(
-        col("event_type").as("sensor"), col("ts"), col("value"), lit(0).as("anomaly"))
-      val fast = Anomaly.fastAnalysis(Anomaly.recentWindow(entries, 200))
-      val metas = fast.select(col("sensor"), col("ts"), col("fast_anomaly")).collect().map(r =>
-        SensorMeta(r.getString(0), r.getTimestamp(1), r.getDouble(2), -1.0, r.getDouble(2)))
-      SnapshotStore.update(metas.toSeq)
-      Serving.allMetaJson(metas.toSeq)
-    }
-
-    // warm + populate the snapshot
-    fullAnalysis()
-
-    // FULL mode: 20 sequential recomputes (the reference "GET /")
-    val fullLat = (1 to 20).map { _ =>
-      val t0 = System.nanoTime(); fullAnalysis(); (System.nanoTime() - t0) / 1e6
-    }
-
-    // STRESS mode: 500 requests at concurrency 10 from the snapshot
-    val pool = Executors.newFixedThreadPool(10)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val stressLat = Await.result(
-      Future.sequence((1 to 500).map { _ =>
-        Future {
-          val t0 = System.nanoTime()
-          val json = Serving.serveSnapshot()
-          require(json.startsWith("""{"entries":["""))
-          (System.nanoTime() - t0) / 1e6
-        }
-      }), 5.minutes)
-    pool.shutdown()
-
-    val (fq25, fq50, fq75, fmax) = quartiles(fullLat)
-    val (sq25, sq50, sq75, smax) = quartiles(stressLat.toSeq)
-    val (fp99, sp99) = (p99(fullLat), p99(stressLat.toSeq))
-    println(
-      s"""{"metric":"serve_latency_ms","sf":"$sfDir","sla_ms":$SlaMillis,""" +
-        s""""full":{"n":20,"p25":$fq25,"p50":$fq50,"p75":$fq75,"p99":$fp99,"max":$fmax},""" +
-        s""""stress":{"n":500,"concurrency":10,"p25":$sq25,"p50":$sq50,"p75":$sq75,"p99":$sp99,"max":$smax}}""")
-    // the SLA is an assertion, not a report line: breaching it fails the
-    // bench run loudly (reference behavior: the ask times out and drops)
-    require(fp99 <= SlaMillis, f"full-mode p99 $fp99%.1f ms breaches the $SlaMillis%.0f ms SLA")
-    require(sp99 <= SlaMillis, f"stress-mode p99 $sp99%.1f ms breaches the $SlaMillis%.0f ms SLA")
-    spark.stop()
-  }
 }

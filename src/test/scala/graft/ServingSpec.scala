@@ -45,6 +45,18 @@ class ServingSpec extends SparkSpecBase {
     SnapshotStore.clear()
   }
 
+  test("snapshot never goes back to an older reading; an equal ts replaces it") {
+    SnapshotStore.clear()
+    val newer = SensorMeta("s", new Timestamp(2000L), 0.2, -1.0, 0.2)
+    SnapshotStore.update(Seq(newer))
+    SnapshotStore.update(Seq(SensorMeta("s", new Timestamp(1000L), 0.9, -1.0, 0.9)))
+    SnapshotStore.get("s") shouldBe Some(newer)
+    val replayed = newer.copy(fastAnomaly = 0.3, avgAnomaly = 0.3)
+    SnapshotStore.update(Seq(replayed))
+    SnapshotStore.get("s") shouldBe Some(replayed)
+    SnapshotStore.clear()
+  }
+
   test("stress-mode serving p99 honors the reference 5 s ask-timeout SLA") {
     SnapshotStore.clear()
     SnapshotStore.update((1 to 50).map(i =>
