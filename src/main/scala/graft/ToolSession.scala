@@ -28,7 +28,8 @@ import org.apache.spark.sql.SparkSession
   *  - the 1024 cap bounds task-scheduling overhead on one box — past it
   *    a single machine is the wrong rehearsal rig anyway.
   *
-  * `SPARK_GRAFT_CPUS` sets the local core count (default 32).
+  * `SPARK_GRAFT_CPUS` sets the local core count (default: the host's
+  * available processors).
   */
 object ToolSession {
 
@@ -73,8 +74,9 @@ object ToolSession {
     * standing confs (UTC, nanos-as-long, codegen cache sized for the
     * catalog) and input-scaled shuffle parallelism. */
   def build(sfDir: String, appName: String = "graft-tool"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = shufflePartitionsFor(cpus.toInt, dirBytes(sfDir))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val inputBytes = dirBytes(sfDir)
+    val parts = shufflePartitionsFor(cpus, inputBytes)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -96,7 +98,7 @@ object ToolSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     System.err.println(f"[session] $appName sf=$sfDir cpus=$cpus " +
-      f"shuffle.partitions=$parts (input ${dirBytes(sfDir) / 1e6}%.0f MB)")
+      f"shuffle.partitions=$parts (input ${inputBytes / 1e6}%.0f MB)")
     spark
   }
 }

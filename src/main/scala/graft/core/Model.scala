@@ -7,7 +7,9 @@ import org.apache.spark.sql.types._
 /** Domain model of the anomaly-detection engine, mirroring the
   * reference's statically-declared shapes (lambda-sample):
   *  - [[MqttEntry]] — the stream payload (mqtt/Producer.scala:23);
-  *  - [[Entry]] — the persisted time-series row, ts stamped at ingest
+  *  - [[Entry]] — the persisted time-series row; `ts` is the stamp the
+  *    broker gave the message when it entered the process, the same in
+  *    the entry log, the analysis table and the served snapshot
   *    (lib/CassandraClient.scala:11, resources/cassandra/schema.sql:4-10);
   *  - [[SensorMeta]] — one analysis result row
   *    (analyzer/Analyzer.scala:24-30, schema.sql:12-19).

@@ -8,27 +8,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Unique consume-time stamp in microseconds: `graft_record_stamp(base)`
+/** Unique consume-time stamp in microseconds: `RecordStamp.next(base)`
   * returns `max(previous + 1, base)` off a JVM-wide monotonic register —
-  * the classic unique-timestamp clamp. Within one JVM two records can
-  * NEVER receive the same stamp, under any per-batch volume (an earlier
-  * row-index×1024 offset scheme let a >500-record partition batch drift
-  * past the next batch's stamp space, re-enabling cross-batch (sensor,
-  * ts) collisions under sustained load). Drift above the wall clock only
-  * accumulates beyond 1M records/s/JVM sustained — far above the
-  * reference cadence — and self-heals the moment the clock catches up.
+  * the classic unique-timestamp clamp, so two stamps from one JVM never
+  * collide. Drift above the wall clock needs >1M records/s/JVM sustained
+  * and self-heals once the clock catches up; across JVMs two stamps can
+  * collide on a wall-clock microsecond, as the reference's per-record
+  * `Instant.now()` can (mqtt/Consumer.scala:64).
   *
-  * Across executor JVMs the register is per-JVM, so two executors can
-  * (like the reference's per-record `Instant.now()`,
-  * mqtt/Consumer.scala:64) collide on a wall-clock microsecond — rare
-  * and non-structural, the same contract as the reference's ms-granular
-  * stamps.
-  *
-  * Exists because `monotonically_increasing_id()` is rejected in
-  * streaming plans; this is the streaming-safe form, sound here because
-  * the value is CONSUMED as a timestamp (cross-replay stability is
-  * already bounded by `current_timestamp()` itself). Codegen'd like the
-  * built-in it replaces.
+  * `graft.sources.broker.Broker.publish` is the one place the program
+  * stamps a reading. The `graft_record_stamp(baseMicros)` SQL function
+  * over the same register stays registered because the benchmark's
+  * `speed_serve` workload resolves it by name for its own stamp.
   */
 case class RecordStamp(child: Expression) extends UnaryExpression with Nondeterministic {
   override def nullable: Boolean = false

@@ -496,11 +496,12 @@ final class MqttClient(host: String, port: Int, clientId: String) {
   * client does that automatically) but NOT re-published into the
   * topic. Distinct messages always carry distinct in-flight pids, so
   * legitimate same-byte publishes are never collapsed — this is
-  * delivery-identity dedup, not content dedup. Downstream,
-  * [[graft.streaming.IngestStream]]'s checkpointed (sensor, ts)
-  * deduplication remains the restart-level guard; the two layers
-  * together are the "exactly-once preserved over an at-least-once
-  * transport" story a 100 TB ingest runs. */
+  * delivery-identity dedup, not content dedup. Each forwarded message
+  * gets its `ts` from `Broker.publish`, so the bridge is where a reading
+  * is stamped. A redelivery the ring has forgotten would get a fresh
+  * `ts`, so [[graft.streaming.IngestStream]]'s checkpointed (sensor, ts)
+  * deduplication cannot catch it; that guard is for sources that bring
+  * their own `ts` and may send a reading twice. */
 object MqttBridge {
   def start(host: String, port: Int, topic: String,
       clientId: String = "graft-bridge"): MqttClient = {

@@ -2,10 +2,11 @@ package graft.sources.broker
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
+import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.core.MqttEntry
+import graft.core.{Entry, MqttEntry}
 
 /** Wire codec for the broker payload — the S2 seam the reference
   * implements with Smile binary (lib/BinarySerializer.scala:58-74,
@@ -38,10 +39,14 @@ object PayloadCodec {
   }
 
   /** Decode stage: a (streaming or batch) DataFrame with a binary
-    * `payload` column → typed MqttEntry rows. */
-  def decodeStage(raw: DataFrame): Dataset[MqttEntry] = {
+    * `payload` column and the broker's `ts` → typed Entry rows that keep
+    * that `ts`. */
+  def decodeStage(raw: DataFrame): Dataset[Entry] = {
     val spark = raw.sparkSession
     import spark.implicits._
-    raw.select("payload").as[Array[Byte]].map(decode)
+    raw.select("payload", "ts").as[(Array[Byte], Timestamp)].map { case (bytes, ts) =>
+      val e = decode(bytes)
+      Entry(e.sensor, ts, e.value, e.anomaly)
+    }
   }
 }

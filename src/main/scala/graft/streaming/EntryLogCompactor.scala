@@ -12,7 +12,8 @@ import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
   * micro-batch upsert log fragments into ~4,500 files in 15 minutes,
   * and every COLD read of it (the "/" fallback recompute, the refit
   * loop's training scan) pays a per-file listing/footer tax that grows
-  * linearly forever (SERVE_SOAK r7: 42 s after 15 min). The reference
+  * linearly forever (42 s after 15 min in the round-7 soak, whose
+  * SERVE_SOAK.json record is in git history). The reference
   * never sees this because Cassandra compacts its SSTables behind the
   * same tables (resources/cassandra/schema.sql); a parquet log needs
   * the compactor run AS PART OF ingest, not as an offline q173 plan.

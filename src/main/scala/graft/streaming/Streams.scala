@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.{fromJavaTimestamp, toJavaTimestamp}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -12,9 +11,9 @@ import graft.core.{Entry, Heuristic, SensorMeta}
   * layers (SURVEY.md §2.8, §3.2, §3.4):
   *
   *  - [[IngestStream]] — MQTT-consumer equivalent (mqtt/Consumer.scala:
-  *    52-66): payload stream → ts stamped at consume time → exactly-once
-  *    append into the partitioned entry table (micro-batch trigger =
-  *    the reference's 200 ms tick).
+  *    52-66): payload stream carrying the broker's consume-time ts →
+  *    exactly-once append into the partitioned entry table (micro-batch
+  *    trigger = the reference's 200 ms tick).
   *  - [[AnalysisStream]] — HistoryWriter/Analyzer loop (analyzer/
   *    HistoryWriter.scala:40-111): per-sensor sliding recent window kept
   *    as typed stream state (`flatMapGroupsWithState`), emitting a
@@ -32,25 +31,13 @@ import graft.core.{Entry, Heuristic, SensorMeta}
   */
 object IngestStream {
 
-  /** `source` must be a streaming DataFrame with (sensor, value,
-    * anomaly) — the MqttEntry shape — and optionally a `ts` column. When
-    * `ts` is absent it is assigned HERE, at consume time, exactly like
-    * Consumer.scala:64 (T2: processing-time semantics).
-    *
-    * Consume-time stamps are PER-RECORD distinct:
-    * `graft_record_stamp(batch micros)` = `max(prev + 1, batch micros)`
-    * off a JVM-wide monotonic register, so two same-JVM records can
-    * never share a stamp at ANY batch volume. The reference stamps each
-    * message individually (`Instant.now()` per record,
-    * mqtt/Consumer.scala:64), so same-sensor readings inside one batch
-    * rarely collide there; a batch-constant stamp made that collision
-    * STRUCTURAL here — every same-sensor reading in a 200 ms micro-batch
-    * collapsed under the upsert (round-2 advisory, silent data loss
-    * under multi-reading producers). Drift above the wall clock needs
-    * >1M records/s/JVM sustained and self-heals; bulk backfills should
-    * carry an explicit `ts` column (respected verbatim). Across executor
-    * JVMs the register is per-JVM, so collisions degrade to the
-    * reference's own wall-clock rarity — rare, not structural.
+  /** `source` must be a streaming DataFrame with (sensor, ts, value,
+    * anomaly) — the [[Entry]] shape. `ts` comes from the source: the
+    * broker sources carry the consume-time stamp `Broker.publish` gave
+    * each message (T2: processing-time semantics, mqtt/Consumer.scala:
+    * 64), and a backfill brings its own. Ingest never stamps, so a
+    * replayed batch writes the same `ts` and every stream that reads the
+    * topic agrees on it.
     *
     * Upsert parity (T4): the reference's CQL `UPDATE` keyed (sensor, ts)
     * is last-write-wins — two writes to the same key collapse to one row
@@ -58,11 +45,11 @@ object IngestStream {
     * log has no keys, so the upsert is re-expressed as streaming
     * deduplication ON THE WAY IN: [[DedupStream.dropDuplicateReadings]]
     * drops every later delivery of an already-seen (sensor, ts) within
-    * the watermark horizon — state survives restarts via the checkpoint,
-    * so a producer redelivering across a query bounce still cannot
-    * duplicate a row. `dedupe = false` restores the raw append-only
-    * log. */
-  /** `compactLog = true` switches the sink to the COMPACT-LOG shape:
+    * a 1-hour watermark horizon — state survives restarts via the
+    * checkpoint, so a producer redelivering across a query bounce still
+    * cannot duplicate a row.
+    *
+    * `compactLog = true` switches the sink to the COMPACT-LOG shape:
     * one file per micro-batch (coalesce(1)), no sensor partitioning.
     * The default (sensor-partitioned, one file per sensor per batch —
     * the Cassandra partition-key analog) optimizes point reads but
@@ -79,24 +66,8 @@ object IngestStream {
       entryDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("200 milliseconds"),
-      dedupe: Boolean = true,
-      horizon: String = "1 hour",
       compactLog: Boolean = false): StreamingQuery = {
-    val stamped =
-      if (source.columns.contains("ts")) source
-      else {
-        // graft_record_stamp: unique-microsecond clamp off the batch
-        // instant — max(prev+1, batch micros) on a JVM-wide register,
-        // so same-JVM stamps can never collide at any batch volume
-        // (see RecordStamp scaladoc for the cross-JVM contract)
-        graft.functions.GraftFunctions.register(source.sparkSession)
-        source.withColumn("ts",
-          timestamp_micros(expr(
-            "graft_record_stamp(unix_micros(current_timestamp()))")))
-      }
-    val upserted =
-      if (dedupe) DedupStream.dropDuplicateReadings(stamped, horizon) else stamped
-    val shaped0 = upserted
+    val shaped0 = DedupStream.dropDuplicateReadings(source)
       .select("sensor", "ts", "value", "anomaly")
     val shaped = if (compactLog) shaped0.coalesce(1) else shaped0
     val writer = shaped
@@ -136,7 +107,8 @@ object AnalysisStream {
       batch: Iterator[Entry],
       state: GroupState[SensorWindow]): Iterator[SensorMeta] = {
     val prev = state.getOption.getOrElse(SensorWindow(Nil, Nil))
-    val incoming = batch.map(e => (e.ts.getTime * 1000L, e.value)).toSeq
+    // the encoder's own conversions, so the window keeps the stored micros
+    val incoming = batch.map(e => (fromJavaTimestamp(e.ts), e.value)).toSeq
     val merged = (prev.tsMicros.zip(prev.values) ++ incoming)
       .sortBy(-_._1)
       .take(recentN)
@@ -149,8 +121,7 @@ object AnalysisStream {
       val latest = values.head
       val fast = Heuristic.score(latest, mean, std)
       val (full, avg) = Heuristic.blend(fast, scorer(sensor).map(f => f(latest)))
-      Iterator.single(SensorMeta(
-        sensor, new Timestamp(merged.head._1 / 1000L), fast, full, avg))
+      Iterator.single(SensorMeta(sensor, toJavaTimestamp(merged.head._1), fast, full, avg))
     }
   }
 
@@ -163,43 +134,16 @@ object AnalysisStream {
       checkpointDir: String,
       recentN: Int = 200,
       scorer: String => Option[Double => Double] = _ => None,
-      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery = {
-    val spark = entryStream.sparkSession
-    import spark.implicits._
-    entryStream
-      .groupByKey(_.sensor)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        update(recentN, scorer))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[SensorMeta], batchId: Long) =>
-        // ONE collect, then local writes: the batch is bounded by ≤ one
-        // row per sensor per micro-batch (sensor count is a config
-        // dimension, not a data dimension), so funneling it through the
-        // driver is O(#sensors) — and it keeps Dataset.persist/unpersist
-        // OUT of the 200 ms hot path. The earlier persist-based form
-        // took the session-global CacheManager lock every micro-batch;
-        // uncacheByCondition walks EVERY cache entry under that lock, so
-        // a concurrent cache user (the T5 refit loop persisting its
-        // training window) convoyed the stream for the whole refit —
-        // round-7 ServeSoak caught the stream execution thread BLOCKED
-        // in CacheManager.uncacheByCondition for 16-22 s per refit.
-        // Idempotent under foreachBatch's at-least-once replay: each
-        // micro-batch owns a partition directory keyed by batchId, so a
-        // restarted batch OVERWRITES its own output instead of appending
-        // duplicates; SnapshotStore.update keeps the newer ts per sensor,
-        // and a replayed meta (equal ts) replaces itself.
-        val metas = batch.collect().toSeq
-        if (metas.nonEmpty) {
-          spark.createDataset(metas)
-            .write.mode("overwrite").parquet(s"$analysisDir/batch=$batchId")
-          SnapshotStore.update(metas)
-        }
-      }
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery =
+    pipeline(entryStream, checkpointDir, recentN, scorer, trigger) { (spark, metas, batchId) =>
+      // Idempotent under foreachBatch's at-least-once replay: each
+      // micro-batch owns a partition directory keyed by batchId, so a
+      // restarted batch OVERWRITES its own output instead of appending
+      // duplicates.
+      import spark.implicits._
+      spark.createDataset(metas)
+        .write.mode("overwrite").parquet(s"$analysisDir/batch=$batchId")
+    }
 
   /** [[start]] twin with TRANSACTIONAL storage (round-5: the storage
     * half of the MERGE story): each micro-batch MERGEs into a
@@ -219,7 +163,36 @@ object AnalysisStream {
       checkpointDir: String,
       recentN: Int = 200,
       scorer: String => Option[Double => Double] = _ => None,
-      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery =
+    pipeline(entryStream, checkpointDir, recentN, scorer, trigger) { (spark, metas, _) =>
+      import spark.implicits._
+      graft.sources.TxLog.upsert(spark, analysisTable,
+        spark.createDataset(metas).toDF(), Seq("name", "ts"))
+    }
+
+  /** The one analysis chain both sinks share: per-sensor window state →
+    * one bounded collect per micro-batch → `sink` → [[SnapshotStore]].
+    *
+    * ONE collect, then local writes: the batch is bounded by ≤ one row
+    * per sensor per micro-batch (sensor count is a config dimension, not
+    * a data dimension), so funneling it through the driver is
+    * O(#sensors) — and it keeps Dataset.persist/unpersist OUT of the
+    * 200 ms hot path. The earlier persist-based form took the
+    * session-global CacheManager lock every micro-batch;
+    * uncacheByCondition walks EVERY cache entry under that lock, so a
+    * concurrent cache user (the T5 refit loop persisting its training
+    * window) convoyed the stream for the whole refit — a round-7 soak
+    * caught the stream execution thread BLOCKED in
+    * CacheManager.uncacheByCondition for 16-22 s per refit.
+    * [[SnapshotStore.update]] keeps the newer ts per sensor, and a
+    * replayed meta (equal ts) replaces itself. */
+  private def pipeline(
+      entryStream: Dataset[Entry],
+      checkpointDir: String,
+      recentN: Int,
+      scorer: String => Option[Double => Double],
+      trigger: Trigger)(
+      sink: (SparkSession, Seq[SensorMeta], Long) => Unit): StreamingQuery = {
     val spark = entryStream.sparkSession
     import spark.implicits._
     entryStream
@@ -229,13 +202,10 @@ object AnalysisStream {
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[SensorMeta], _: Long) =>
-        // one bounded collect; no per-batch CacheManager traffic (the
-        // lock-convoy rationale in [[start]]'s foreachBatch applies)
+      .foreachBatch { (batch: Dataset[SensorMeta], batchId: Long) =>
         val metas = batch.collect().toSeq
         if (metas.nonEmpty) {
-          graft.sources.TxLog.upsert(spark, analysisTable,
-            spark.createDataset(metas).toDF(), Seq("name", "ts"))
+          sink(spark, metas, batchId)
           SnapshotStore.update(metas)
         }
       }

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.MqttEntry
+import graft.sources.broker.{Broker, BrokerSourceProvider}
 import graft.streaming.{EntryLogCompactor, IngestStream}
 
 /** Live-sink compaction (the round-7 soak's un-compacted-log tax):
@@ -26,6 +26,15 @@ class CompactorSpec extends SparkSpecBase {
     df.selectExpr("sensor", "unix_micros(ts)", "value", "anomaly")
       .as[(String, Long, Double, Int)].collect().toSeq.sorted
 
+  /** Ingest from the broker topic, the deployment's source: each reading
+    * carries the ts `Broker.publish` stamped. */
+  private def ingest(entryDir: String, ckpt: String): StreamingQuery = {
+    Broker.clear()
+    IngestStream.start(
+      spark.readStream.format(classOf[BrokerSourceProvider].getName).load(),
+      entryDir, ckpt, Trigger.ProcessingTime(0))
+  }
+
   private def parquetFiles(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
@@ -35,15 +44,12 @@ class CompactorSpec extends SparkSpecBase {
   }
 
   test("compacted read is content-identical to the raw sink read, with bounded files") {
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-centry")
     val compDir = tmp("graft-ccomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-cckpt"),
-      Trigger.ProcessingTime(0))
+    val q = ingest(entryDir, tmp("graft-cckpt"))
     // several micro-batches → several small files per sensor partition
     (1 to 8).foreach { b =>
-      source.addData((1 to 10).map(i => MqttEntry(s"s${i % 3}", b * 100.0 + i, i % 2)): _*)
+      Broker.publish((1 to 10).map(i => MqttEntry(s"s${i % 3}", b * 100.0 + i, i % 2)): _*)
       q.processAllAvailable()
     }
     val c = new EntryLogCompactor(spark, entryDir, compDir)
@@ -69,7 +75,7 @@ class CompactorSpec extends SparkSpecBase {
     // files appear repeatedly across manifests — the multiset compare
     // below fails if any repeat is read twice
     (9 to 31).foreach { b =>
-      source.addData((1 to 10).map(i => MqttEntry(s"s${i % 3}", b * 100.0 + i, i % 2)): _*)
+      Broker.publish((1 to 10).map(i => MqttEntry(s"s${i % 3}", b * 100.0 + i, i % 2)): _*)
       q.processAllAvailable()
     }
     rowSet(c.read()) shouldBe rowSet(spark.read.parquet(entryDir))
@@ -91,14 +97,11 @@ class CompactorSpec extends SparkSpecBase {
   }
 
   test("a restarted compactor resumes from the state marker instead of re-folding history") {
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-rentry")
     val compDir = tmp("graft-rcomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-rckpt"),
-      Trigger.ProcessingTime(0))
+    val q = ingest(entryDir, tmp("graft-rckpt"))
     (1 to 4).foreach { b =>
-      source.addData((1 to 8).map(i => MqttEntry(s"s${i % 2}", b * 10.0 + i, 0)): _*)
+      Broker.publish((1 to 8).map(i => MqttEntry(s"s${i % 2}", b * 10.0 + i, 0)): _*)
       q.processAllAvailable()
     }
     val c1 = new EntryLogCompactor(spark, entryDir, compDir)
@@ -108,7 +111,7 @@ class CompactorSpec extends SparkSpecBase {
       .filter(_.isDirectory).map(_.getName).toSet
     // process restart: a NEW instance over the same dirs
     (5 to 6).foreach { b =>
-      source.addData((1 to 8).map(i => MqttEntry(s"s${i % 2}", b * 10.0 + i, 0)): _*)
+      Broker.publish((1 to 8).map(i => MqttEntry(s"s${i % 2}", b * 10.0 + i, 0)): _*)
       q.processAllAvailable()
     }
     val c2 = new EntryLogCompactor(spark, entryDir, compDir)
@@ -128,13 +131,10 @@ class CompactorSpec extends SparkSpecBase {
   }
 
   test("a re-run tick of the same range is idempotent (overwrite keyed by batch id)") {
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-ientry")
     val compDir = tmp("graft-icomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-ickpt"),
-      Trigger.ProcessingTime(0))
-    source.addData((1 to 20).map(i => MqttEntry(s"s${i % 2}", i.toDouble, 0)): _*)
+    val q = ingest(entryDir, tmp("graft-ickpt"))
+    Broker.publish((1 to 20).map(i => MqttEntry(s"s${i % 2}", i.toDouble, 0)): _*)
     q.processAllAvailable()
     val c1 = new EntryLogCompactor(spark, entryDir, compDir)
     c1.tick()
@@ -149,15 +149,12 @@ class CompactorSpec extends SparkSpecBase {
   }
 
   test("fold-up merges tick dirs past the threshold and keeps content") {
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-fentry")
     val compDir = tmp("graft-fcomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-fckpt"),
-      Trigger.ProcessingTime(0))
+    val q = ingest(entryDir, tmp("graft-fckpt"))
     val c = new EntryLogCompactor(spark, entryDir, compDir, foldThreshold = 3)
     (1 to 5).foreach { b =>
-      source.addData((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
+      Broker.publish((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
       q.processAllAvailable()
       c.tick()
     }
@@ -175,15 +172,12 @@ class CompactorSpec extends SparkSpecBase {
     // on disk. Now a fold-up pins superseded dirs on the readers that
     // were reachable when it committed, and the per-tick sweep deletes a
     // generation the moment its last pinning reader is collected.
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-gentry")
     val compDir = tmp("graft-gcomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-gckpt"),
-      Trigger.ProcessingTime(0))
+    val q = ingest(entryDir, tmp("graft-gckpt"))
     val c = new EntryLogCompactor(spark, entryDir, compDir, foldThreshold = 2)
     def batch(b: Int): Unit = {
-      source.addData((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
+      Broker.publish((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
       q.processAllAvailable()
     }
     // two ticks → two tick dirs (at the threshold, no fold-up yet)
@@ -228,13 +222,10 @@ class CompactorSpec extends SparkSpecBase {
     // EVERY tick a fold-up; a reader hammers read().count() in
     // parallel. Any reclaimed-under-reader dir surfaces as a
     // FileNotFound/PATH_NOT_FOUND here.
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-rentry")
     val compDir = tmp("graft-rcomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-rckpt"),
-      Trigger.ProcessingTime(0))
-    source.addData((1 to 10).map(i => MqttEntry(s"s${i % 3}", i.toDouble, 0)): _*)
+    val q = ingest(entryDir, tmp("graft-rckpt"))
+    Broker.publish((1 to 10).map(i => MqttEntry(s"s${i % 3}", i.toDouble, 0)): _*)
     q.processAllAvailable()
     val c = new EntryLogCompactor(spark, entryDir, compDir, foldThreshold = 1)
     c.tick()
@@ -250,7 +241,7 @@ class CompactorSpec extends SparkSpecBase {
       t.setDaemon(true); t.start(); t
     }
     (2 to 25).foreach { b =>
-      source.addData((1 to 10).map(i => MqttEntry(s"s${i % 3}", b * 100.0 + i, 0)): _*)
+      Broker.publish((1 to 10).map(i => MqttEntry(s"s${i % 3}", b * 100.0 + i, 0)): _*)
       q.processAllAvailable()
       c.tick() // fold + fold-up + sweep racing the reader threads
     }
@@ -272,15 +263,12 @@ class CompactorSpec extends SparkSpecBase {
     // (any restart without close) leaked them permanently. They are in
     // the state marker now, and loadState deletes them — no frame
     // survives a process death, so restart-time reclamation is safe.
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-kentry")
     val compDir = tmp("graft-kcomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-kckpt"),
-      Trigger.ProcessingTime(0))
+    val q = ingest(entryDir, tmp("graft-kckpt"))
     val c1 = new EntryLogCompactor(spark, entryDir, compDir, foldThreshold = 2)
     def batch(b: Int): Unit = {
-      source.addData((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
+      Broker.publish((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
       q.processAllAvailable()
     }
     batch(1); c1.tick()
@@ -305,14 +293,11 @@ class CompactorSpec extends SparkSpecBase {
     // read-optimized per-sensor layout — so a point read over read()
     // must touch ONLY the queried sensor's files in the compacted bulk,
     // not scan every sensor's
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
     val entryDir = tmp("graft-pentry")
     val compDir = tmp("graft-pcomp")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-pckpt"),
-      Trigger.ProcessingTime(0))
+    val q = ingest(entryDir, tmp("graft-pckpt"))
     (1 to 4).foreach { b =>
-      source.addData((1 to 12).map(i => MqttEntry(s"s${i % 4}", b * 10.0 + i, 0)): _*)
+      Broker.publish((1 to 12).map(i => MqttEntry(s"s${i % 4}", b * 10.0 + i, 0)): _*)
       q.processAllAvailable()
     }
     val c = new EntryLogCompactor(spark, entryDir, compDir,

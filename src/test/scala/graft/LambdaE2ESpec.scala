@@ -14,8 +14,8 @@ import graft.streaming.{AnalysisStream, IngestStream, SnapshotStore}
 /** The whole lambda architecture end-to-end, every layer the reference
   * wires together (SURVEY §3), in one flow:
   *
-  *   POST /mqtt → broker topic → DSv2 micro-batch ingest (ts stamped at
-  *   consume) → partitioned entry table → stateful analysis stream
+  *   POST /mqtt → broker topic (ts stamped at consume) → DSv2
+  *   micro-batch ingest → partitioned entry table → stateful analysis stream
   *   (bounded window heuristic) → analysis table + serving snapshot →
   *   GET /stress returns the scores over HTTP.
   *
@@ -57,8 +57,7 @@ class LambdaE2ESpec extends SparkSpecBase {
     try {
       // producer publishes through the HTTP control surface, one tick
       // per micro-batch (the reference's 200 ms cadence: one reading per
-      // sensor per tick; ingest upserts on (sensor, consume-ts), so each
-      // tick must be its own batch to persist as its own row)
+      // sensor per tick; the broker stamps each reading with its own ts)
       Seq(
         Seq(("s1", 10.0, 0), ("s2", -5.0, 0)),
         Seq(("s1", 12.0, 0), ("s2", -6.5, 0)),
@@ -67,7 +66,6 @@ class LambdaE2ESpec extends SparkSpecBase {
           post(s"/mqtt?sensor=$s&value=$v&anomaly=$a").statusCode() shouldBe 200
         }
         ingest.processAllAvailable()
-        nextMilli() // ticks must land on distinct consume-time millis
       }
 
       // speed layer over the ingested table (batch-start the analysis
@@ -122,7 +120,6 @@ class LambdaE2ESpec extends SparkSpecBase {
     def tick(): Unit = {
       ProducerSim.publishTick(Seq("s1", "s2"), rnd = rnd)
       ingest.processAllAvailable()
-      nextMilli() // each tick = one consume instant (upsert key)
     }
     try {
       // episode: flip s1 anomalous over the reference control route

@@ -23,16 +23,6 @@ trait SparkSpecBase extends AnyFunSuite with Matchers {
   /** Reference fixture tolerance (EntriesFixture.scala:10). */
   val Precision = 0.0002
 
-  /** Advance past the current clock millisecond — consume-time stamps
-    * are (batch milli + per-record micro offset), so micro-batches
-    * separated by a milli can never collide on (sensor, ts). Polling,
-    * not a fixed sleep: a coarse-clock host can swallow a 5 ms sleep
-    * whole (round-2 advisory flake). */
-  def nextMilli(): Unit = {
-    val t0 = System.currentTimeMillis()
-    while (System.currentTimeMillis() <= t0) Thread.`yield`()
-  }
-
   /** Temp output dir, deleted (recursively) when `f` returns or throws
     * — specs that write files must not accumulate garbage across runs. */
   def withTempDir[A](prefix: String)(f: String => A): A = {

@@ -20,23 +20,24 @@ class StreamingSpec extends SparkSpecBase {
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
   test("ingest stream stamps per-record distinct consume-time ts (T2/T4)") {
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[MqttEntry]
+    import graft.sources.broker.Broker
+    Broker.clear()
+    val source = spark.readStream
+      .format("graft.sources.broker.BrokerSourceProvider").load()
     val entryDir = tmp("graft-entry")
-    val q = IngestStream.start(source.toDF(), entryDir, tmp("graft-ckpt"),
+    val q = IngestStream.start(source, entryDir, tmp("graft-ckpt"),
       Trigger.ProcessingTime(0))
     val t0 = System.currentTimeMillis()
     // per-record stamping: multiple same-sensor readings in ONE batch
     // keep distinct ts — nothing collapses (the reference stamps each
     // message with its own Instant.now(); only true same-instant writes
-    // collide there, and batch-constant stamping must not make the
-    // collision structural)
-    source.addData(
+    // collide there, and the broker's stamp must not make the collision
+    // structural)
+    Broker.publish(
       MqttEntry("s1", 10.0, 0), MqttEntry("s1", 120.0, 1),
       MqttEntry("s2", -5.0, 0), MqttEntry("s2", 7.5, 0))
     q.processAllAvailable()
-    nextMilli()
-    source.addData(MqttEntry("s1", 11.0, 0))
+    Broker.publish(MqttEntry("s1", 11.0, 0))
     q.processAllAvailable()
     // observe() telemetry: named per-batch metrics ride the progress
     // events — rows across batches must account for every ingested row,
@@ -58,6 +59,7 @@ class StreamingSpec extends SparkSpecBase {
     all(ts.map(_.getTime)) should be <= System.currentTimeMillis() + 1000
     // partitioned layout by sensor (the Cassandra partition-key analog)
     new java.io.File(entryDir).list().count(_.startsWith("sensor=")) shouldBe 2
+    Broker.clear()
   }
 
   test("redelivered (sensor, ts) rows stay collapsed across a query restart (T4)") {
@@ -88,7 +90,7 @@ class StreamingSpec extends SparkSpecBase {
     Broker.clear()
     val raw = spark.readStream
       .format("graft.sources.broker.RawBrokerSourceProvider").load()
-    raw.schema.fieldNames shouldBe Array("payload") // wire bytes, not rows
+    raw.schema.fieldNames shouldBe Array("payload", "ts") // wire bytes + broker stamp
     val entryDir = tmp("graft-raw-entry")
     val q = IngestStream.start(PayloadCodec.decodeStage(raw).toDF(),
       entryDir, tmp("graft-raw-ckpt"), Trigger.ProcessingTime(0))
@@ -126,7 +128,6 @@ class StreamingSpec extends SparkSpecBase {
       Trigger.ProcessingTime(0))
     Broker.publish(MqttEntry("s1", 10.0, 0), MqttEntry("s2", 120.0, 1))
     q.processAllAvailable()
-    nextMilli() // distinct consume-time milli for the upsert key
     Broker.publish(MqttEntry("s1", 11.0, 0))
     q.processAllAvailable()
     // re-processing must not re-read committed offsets
@@ -136,6 +137,40 @@ class StreamingSpec extends SparkSpecBase {
     out.count() shouldBe 3
     out.select($"sensor").as[String].collect().sorted shouldBe Array("s1", "s1", "s2")
     Broker.clear()
+  }
+
+  test("one reading, one ts: the served snapshot names the newest entry-log row per sensor") {
+    import graft.sources.broker.{Broker, BrokerSourceProvider}
+    Broker.clear()
+    SnapshotStore.clear()
+    val entryDir = tmp("graft-onets-entry")
+    val analysisDir = tmp("graft-onets-analysis")
+    def topic = spark.readStream.format(classOf[BrokerSourceProvider].getName).load()
+    // both streams read the topic, as the deployment wires them
+    val ingest = IngestStream.start(topic, entryDir, tmp("graft-onets-ickpt"),
+      Trigger.ProcessingTime(0))
+    val analysis = AnalysisStream.start(topic.as[Entry], analysisDir,
+      tmp("graft-onets-ackpt"), trigger = Trigger.ProcessingTime(0))
+    (1 to 3).foreach { b =>
+      Broker.publish((1 to 6).map(i => MqttEntry(s"s${i % 3}", b * 10.0 + i, 0)): _*)
+      ingest.processAllAvailable()
+      analysis.processAllAvailable()
+    }
+    ingest.stop(); analysis.stop()
+    val newest = spark.read.parquet(entryDir)
+      .groupBy($"sensor").agg(org.apache.spark.sql.functions.max($"ts").as("ts"))
+      .as[(String, Timestamp)].collect().toMap
+    newest.keySet shouldBe Set("s0", "s1", "s2")
+    SnapshotStore.all.map(m => m.name -> m.ts).toMap shouldBe newest
+    // the persisted analysis history names entry-log rows too
+    val logged = spark.read.parquet(entryDir).select($"sensor", $"ts")
+      .as[(String, Timestamp)].collect().toSet
+    val analysed = spark.read.parquet(analysisDir).select($"name", $"ts")
+      .as[(String, Timestamp)].collect().toSet
+    analysed should not be empty
+    analysed.subsetOf(logged) shouldBe true
+    Broker.clear()
+    SnapshotStore.clear()
   }
 
   test("stateful analysis: bounded window, snapshot refresh, change detection (T3/W5)") {
