@@ -1,6 +1,11 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
+
+import graft.sources.JdkLocalFileSystem
 
 /** The one session builder: Bench, Verify, GraftSession and perfbench
   * all run the SAME engine configuration. Shuffle parallelism scales
@@ -30,6 +35,11 @@ import org.apache.spark.sql.SparkSession
   *
   * `SPARK_GRAFT_CPUS` sets the local core count (default: the host's
   * available processors).
+  *
+  * `file:` paths are served by [[graft.sources.JdkLocalFileSystem]],
+  * which sets permissions and reads links in-process instead of
+  * starting a `chmod`/`readlink` child process per checkpoint, state
+  * store or sink file.
   */
 object ToolSession {
 
@@ -95,10 +105,13 @@ object ToolSession {
       // long-lived serving deployment sizes spark.local.dir instead.
       .config("spark.cleaner.periodicGC.interval", "3min")
       .config("spark.io.compression.codec", "lz4")
+      .config(JdkLocalFileSystem.SparkConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val localFs = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
     System.err.println(f"[session] $appName sf=$sfDir cpus=$cpus " +
-      f"shuffle.partitions=$parts (input ${inputBytes / 1e6}%.0f MB)")
+      f"shuffle.partitions=$parts (input ${inputBytes / 1e6}%.0f MB) " +
+      f"localfs=${localFs.getClass.getSimpleName}")
     spark
   }
 }

@@ -18,6 +18,7 @@ trait SparkSpecBase extends AnyFunSuite with Matchers {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events TIMESTAMP(NANOS)
     .config("spark.ui.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", "8192")
+    .config(graft.sources.JdkLocalFileSystem.SparkConfs) // as ToolSession.build
     .getOrCreate()
 
   /** Reference fixture tolerance (EntriesFixture.scala:10). */
