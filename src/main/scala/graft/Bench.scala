@@ -1,14 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark. An untimed warmup pass plus N timed sweeps:
+/** Per-round benchmark. An untimed warmup pass plus three timed sweeps:
   *
   *  1. an UNTIMED warmup pass that runs every query once — this
   *     materializes the shared persisted intermediates (dedup signature/
   *     candidate tables, normalized embeddings) and pays all codegen /
   *     plan-compile cost, exactly like a production pipeline that
   *     persists stage outputs before serving queries over them;
-  *  2. N ≥ 3 timed WARM sweeps of the whole catalog, interleaved (each
+  *  2. three timed WARM sweeps of the whole catalog, interleaved (each
   *     sweep runs q0..qN in order); per query the MIN over sweeps is the
   *     steady-state cost and the MEDIAN is the variance-honesty figure.
   *
@@ -62,9 +62,7 @@ object Bench {
     // + codegen (≤ sf10), but at sf30 eight concurrent memo builds stack
     // their shuffle transients on one box's disk (the ENOSPC root cause,
     // SCALE.md r12) — scale down to 3-way past ~3 GB of input.
-    // SPARK_GRAFT_WARMUP_THREADS overrides for A/B.
-    val warmThreads = sys.env.get("SPARK_GRAFT_WARMUP_THREADS").map(_.toInt)
-      .getOrElse(if (ToolSession.dirBytes(sfDir) > (3L << 30)) 3 else 8)
+    val warmThreads = if (ToolSession.dirBytes(sfDir) > (3L << 30)) 3 else 8
     val pool = java.util.concurrent.Executors.newFixedThreadPool(warmThreads)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -106,7 +104,7 @@ object Bench {
     // a single sequential pass cannot reject host-steal windows — a
     // CONTIGUOUS 8-query block ran at 5-28x its isolated cost with ZERO
     // JVM GC (CPU stolen by a co-tenant, not by this code). The fix is
-    // in the instrument: run N>=3 full INTERLEAVED sweeps of the catalog
+    // in the instrument: run three full INTERLEAVED sweeps of the catalog
     // (sweep = q1..qN in order, then again), so a steal window that
     // lands on positions 161-168 of one sweep lands on DIFFERENT queries
     // in the next; per-query min over sweeps is the steady-state cost
@@ -126,7 +124,7 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
     }
     def gcMs: Long = gcBeans.map(_.getCollectionTime).sum
-    val sweeps = sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEPS", "3").toInt.max(1)
+    val sweeps = 3
     // per sweep: name -> (wall, gc, ok)
     val sweepRuns: Seq[Seq[(String, Double, Double, Boolean)]] =
       (1 to sweeps).map { s =>
@@ -151,12 +149,7 @@ object Bench {
       val ok = obs.forall(_._4)
       val sortedW = obs.map(_._2).sorted
       val minW = sortedW.head
-      // true median: average the two middle elements on even sweep
-      // counts (SPARK_GRAFT_BENCH_SWEEPS is user-settable) — the upper
-      // element alone would inflate the honesty metric on even N
-      val medW =
-        if (sortedW.size % 2 == 1) sortedW(sortedW.size / 2)
-        else (sortedW(sortedW.size / 2 - 1) + sortedW(sortedW.size / 2)) / 2.0
+      val medW = sortedW(sweeps / 2)
       val gcOfMin = obs.minBy(_._2)._3
       (name, if (ok) minW else -1.0, if (ok) medW else -1.0, gcOfMin, ok)
     }

@@ -80,9 +80,27 @@ object ToolSession {
     (math.min(math.max(1L, 1024L / cpus), waves) * cpus).toInt
   }
 
-  /** Build the measurement session over `sfDir` with the engine's
-    * standing confs (UTC, nanos-as-long, codegen cache sized for the
-    * catalog) and input-scaled shuffle parallelism. */
+  /** The engine's standing confs, shared by [[build]] and the test
+    * session: UTC, UI off, a codegen cache sized for the catalog,
+    * nanos-as-long, lz4 and the in-process local file system. */
+  val StandingConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Shuffle files of COMPLETED jobs linger until a driver GC lets
+    // ContextCleaner reclaim them; Spark's periodicGC default (30 min)
+    // is longer than a whole bench warmup, so a big-SF session
+    // accumulates every build's transients at once — the round-12
+    // sf30 sweep died of ENOSPC under a single 70 GB blockmgr dir
+    // with most of it dead (SCALE.md r12). 3 min keeps a measurement
+    // session's transient footprint near its live working set; a
+    // long-lived serving deployment sizes spark.local.dir instead.
+    "spark.cleaner.periodicGC.interval" -> "3min",
+    "spark.io.compression.codec" -> "lz4") ++ JdkLocalFileSystem.SparkConfs
+
+  /** Build the measurement session over `sfDir` with the
+    * [[StandingConfs]] and input-scaled shuffle parallelism. */
   def build(sfDir: String, appName: String = "graft-tool"): SparkSession = {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val inputBytes = dirBytes(sfDir)
@@ -91,21 +109,7 @@ object ToolSession {
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Shuffle files of COMPLETED jobs linger until a driver GC lets
-      // ContextCleaner reclaim them; Spark's periodicGC default (30 min)
-      // is longer than a whole bench warmup, so a big-SF session
-      // accumulates every build's transients at once — the round-12
-      // sf30 sweep died of ENOSPC under a single 70 GB blockmgr dir
-      // with most of it dead (SCALE.md r12). 3 min keeps a measurement
-      // session's transient footprint near its live working set; a
-      // long-lived serving deployment sizes spark.local.dir instead.
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .config("spark.io.compression.codec", "lz4")
-      .config(JdkLocalFileSystem.SparkConfs)
+      .config(StandingConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val localFs = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)

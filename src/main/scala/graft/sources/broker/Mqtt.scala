@@ -498,10 +498,10 @@ final class MqttClient(host: String, port: Int, clientId: String) {
   * legitimate same-byte publishes are never collapsed — this is
   * delivery-identity dedup, not content dedup. Each forwarded message
   * gets its `ts` from `Broker.publish`, so the bridge is where a reading
-  * is stamped. A redelivery the ring has forgotten would get a fresh
-  * `ts`, so [[graft.streaming.IngestStream]]'s checkpointed (sensor, ts)
-  * deduplication cannot catch it; that guard is for sources that bring
-  * their own `ts` and may send a reading twice. */
+  * is stamped. The ring is the only redelivery guard on this path:
+  * [[graft.streaming.IngestStream]] keeps no state, and a redelivery
+  * the ring has forgotten would get a fresh `ts`, which no (sensor, ts)
+  * dedupe could catch. */
 object MqttBridge {
   def start(host: String, port: Int, topic: String,
       clientId: String = "graft-bridge"): MqttClient = {

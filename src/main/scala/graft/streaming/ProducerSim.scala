@@ -11,8 +11,7 @@ import graft.sources.broker.Broker
   * control (`POST /update` in the reference; [[setAnomalous]] here,
   * wired to the same route by [[graft.serve.HttpShim]]), so anomalies
   * arrive in EPISODES — consecutive anomalous readings per sensor —
-  * rather than i.i.d. draws ([[Generator]] keeps the i.i.d. marginal
-  * variant for unattended load).
+  * rather than i.i.d. draws.
   *
   * A producer is a single process in the reference too — driver-local
   * mutable state is the faithful shape, not a scale compromise; the

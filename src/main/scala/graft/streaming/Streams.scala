@@ -39,15 +39,13 @@ object IngestStream {
     * replayed batch writes the same `ts` and every stream that reads the
     * topic agrees on it.
     *
-    * Upsert parity (T4): the reference's CQL `UPDATE` keyed (sensor, ts)
-    * is last-write-wins — two writes to the same key collapse to one row
-    * (mqtt/Consumer.scala:59-66, schema.sql:9). An append-only parquet
-    * log has no keys, so the upsert is re-expressed as streaming
-    * deduplication ON THE WAY IN: [[DedupStream.dropDuplicateReadings]]
-    * drops every later delivery of an already-seen (sensor, ts) within
-    * a 1-hour watermark horizon — state survives restarts via the
-    * checkpoint, so a producer redelivering across a query bounce still
-    * cannot duplicate a row.
+    * No state: source → `observe` → parquet sink, with no watermark,
+    * state store or shuffle. The reference's CQL `UPDATE` keyed (sensor,
+    * ts) (mqtt/Consumer.scala:59-66) collapses a key only when two
+    * writes share an instant; broker stamps are unique per JVM, a replay
+    * re-reads the same stamps and the sink's `_spark_metadata` log skips
+    * a committed batch. A source that brings its own `ts` (a backfill)
+    * composes [[DedupStream.dropDuplicateReadings]] before `start`.
     *
     * `compactLog = true` switches the sink to the COMPACT-LOG shape:
     * one file per micro-batch (coalesce(1)), no sensor partitioning.
@@ -67,8 +65,7 @@ object IngestStream {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("200 milliseconds"),
       compactLog: Boolean = false): StreamingQuery = {
-    val shaped0 = DedupStream.dropDuplicateReadings(source)
-      .select("sensor", "ts", "value", "anomaly")
+    val shaped0 = source.select("sensor", "ts", "value", "anomaly")
     val shaped = if (compactLog) shaped0.coalesce(1) else shaped0
     val writer = shaped
       // named per-batch metrics on the PIPELINE's own rows (Spark's
@@ -218,7 +215,9 @@ object AnalysisStream {
   * `dropDuplicates(["sensor","ts"])` on the analysis stream): duplicate
   * deliveries of the same keyed reading are dropped exactly-once within
   * the watermark horizon, after which the key's state is evicted — at
-  * 100 TB state stays bounded by (keys active within the horizon). */
+  * 100 TB state stays bounded by (keys active within the horizon). A
+  * source that brings its own `ts` composes it before
+  * [[IngestStream.start]]: the CQL `UPDATE` upsert parity (T4). */
 object DedupStream {
   def dropDuplicateReadings(
       entries: DataFrame,

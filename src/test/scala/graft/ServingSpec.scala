@@ -6,9 +6,9 @@ import java.sql.Timestamp
 import graft.core.SensorMeta
 import graft.ml.AnomalyForest
 import graft.sources.Csv
-import graft.streaming.{Generator, Serving, SnapshotStore}
+import graft.streaming.{ProducerSim, Serving, SnapshotStore}
 
-/** Serving JSON golden shape, CSV round-trip, generator stream, and the
+/** Serving JSON golden shape, CSV round-trip, producer draws, and the
   * forest debug export — the remaining SURVEY §2 surface (S12-S14, F8,
   * M5). */
 class ServingSpec extends SparkSpecBase {
@@ -84,25 +84,19 @@ class ServingSpec extends SparkSpecBase {
 
   test("generator emits the producer distribution (F8)") {
     val sensors = Seq("s1", "s2", "s3", "s4")
-    val q = Generator.mqttStream(spark, sensors, bound = 100, anomalyRate = 0.1,
-      rowsPerSecond = 2000)
-      .writeStream.format("memory").queryName("gen_out").start()
-    try {
-      val deadline = System.currentTimeMillis() + 20000
-      var n = 0L
-      while (n < 200 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(250)
-        n = spark.table("gen_out").count()
-      }
-      n should be >= 200L
-      val rows = spark.table("gen_out").as[(String, Double, Int)].collect()
-      rows.map(_._1).toSet shouldBe sensors.toSet
-      // labeled anomalies are exactly the out-of-bound magnitudes
-      rows.foreach { case (_, v, a) =>
-        if (a == 1) math.abs(v) should be >= 100.0 else math.abs(v) should be < 100.0
-      }
-    } finally {
-      spark.streams.active.foreach(_.stop())
+    val rnd = new java.util.Random(8L)
+    ProducerSim.reset()
+    // 60 ticks; s2 and s4 run an anomaly episode over ticks 20-39
+    val rows = try (0 until 60).flatMap { t =>
+      Seq("s2", "s4").foreach(ProducerSim.setAnomalous(_, t >= 20 && t < 40))
+      ProducerSim.tick(sensors, bound = 100, rnd = rnd)
+    } finally ProducerSim.reset()
+    rows.size should be >= 200
+    rows.map(_.sensor).toSet shouldBe sensors.toSet
+    rows.count(_.anomaly == 1) shouldBe 40
+    // labeled anomalies are exactly the out-of-bound magnitudes
+    rows.foreach { e =>
+      if (e.anomaly == 1) math.abs(e.value) should be >= 100.0 else math.abs(e.value) should be < 100.0
     }
   }
 

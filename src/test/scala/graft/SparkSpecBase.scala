@@ -14,11 +14,7 @@ trait SparkSpecBase extends AnyFunSuite with Matchers {
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events TIMESTAMP(NANOS)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries", "8192")
-    .config(graft.sources.JdkLocalFileSystem.SparkConfs) // as ToolSession.build
+    .config(ToolSession.StandingConfs)
     .getOrCreate()
 
   /** Reference fixture tolerance (EntriesFixture.scala:10). */

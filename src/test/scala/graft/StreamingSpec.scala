@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.{Entry, Heuristic, MqttEntry}
-import graft.streaming.{AnalysisStream, IngestStream, SnapshotStore}
+import graft.streaming.{AnalysisStream, DedupStream, IngestStream, SnapshotStore}
 
 /** Streaming-layer tests (SURVEY.md §2.8/§3.2/§3.4): micro-batch ingest
   * with consume-time timestamps, stateful bounded-window analysis, and
@@ -68,7 +68,9 @@ class StreamingSpec extends SparkSpecBase {
     val entryDir = tmp("graft-upsert-entry")
     val ckpt = tmp("graft-upsert-ckpt")
     def ts(s: Long) = new Timestamp(s * 1000L)
-    val q1 = IngestStream.start(source.toDF(), entryDir, ckpt, Trigger.ProcessingTime(0))
+    // a source that brings its own ts composes the dedupe before ingest
+    def deduped = DedupStream.dropDuplicateReadings(source.toDF())
+    val q1 = IngestStream.start(deduped, entryDir, ckpt, Trigger.ProcessingTime(0))
     source.addData(Entry("a", ts(10), 1.0, 0), Entry("a", ts(11), 2.0, 0))
     q1.processAllAvailable()
     q1.stop()
@@ -76,13 +78,36 @@ class StreamingSpec extends SparkSpecBase {
     // bounced: the dedup state lives in the checkpoint, so the duplicate
     // is dropped, not appended (reference CQL UPDATE = idempotent write)
     source.addData(Entry("a", ts(10), 1.0, 0), Entry("a", ts(12), 3.0, 0))
-    val q2 = IngestStream.start(source.toDF(), entryDir, ckpt, Trigger.ProcessingTime(0))
+    val q2 = IngestStream.start(deduped, entryDir, ckpt, Trigger.ProcessingTime(0))
     q2.processAllAvailable()
     q2.stop()
     val out = spark.read.parquet(entryDir)
     out.count() shouldBe 3
     out.select($"ts").as[Timestamp].collect().map(_.getTime).sorted shouldBe
       Array(10000L, 11000L, 12000L)
+  }
+
+  test("ingest query keeps no state: no stateful operator, watermark or shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.streaming.operators.stateful.{EventTimeWatermarkExec, StateStoreWriter}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.sources.broker.{Broker, BrokerSourceProvider}
+    Broker.clear()
+    val ckpt = tmp("graft-nostate-ckpt")
+    val q = IngestStream.start(
+      spark.readStream.format(classOf[BrokerSourceProvider].getName).load(),
+      tmp("graft-nostate-entry"), ckpt, Trigger.ProcessingTime(0))
+    try (1 to 2).foreach { b =>
+      Broker.publish(MqttEntry("s1", b.toDouble, 0), MqttEntry("s2", -b.toDouble, 1))
+      q.processAllAvailable()
+    } finally q.stop()
+    q.lastProgress.stateOperators shouldBe empty
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    plan.collect {
+      case p @ (_: StateStoreWriter | _: EventTimeWatermarkExec | _: ShuffleExchangeLike) => p.nodeName
+    } shouldBe empty
+    new java.io.File(ckpt, "state").exists() shouldBe false
+    Broker.clear()
   }
 
   test("raw binary payloads decode to typed rows and feed ingest (S2)") {
