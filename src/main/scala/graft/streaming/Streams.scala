@@ -19,8 +19,11 @@ import graft.core.{Entry, Heuristic, SensorMeta}
   *    as typed stream state (`flatMapGroupsWithState`), emitting a
   *    SensorMeta per sensor per micro-batch that touched it — the
   *    pull-and-check freshness dance disappears because the stream IS
-  *    the freshness mechanism (T3). Results append to the analysis table
-  *    and refresh [[SnapshotStore]].
+  *    the freshness mechanism (T3). Each micro-batch refreshes
+  *    [[SnapshotStore]] first and then appends to the analysis table:
+  *    served before stored, as the reference's HistoryWriter persists
+  *    only what the Redis snapshot already serves (HistoryWriter.scala:
+  *    80-101).
   *  - [[SnapshotStore]] — the serving layer (Redis `fast-analysis` hash
   *    + stress-mode `lastMeta`, Analyzer.scala:93,117-121): latest meta
   *    per sensor, served without touching storage.
@@ -46,6 +49,14 @@ object IngestStream {
     * re-reads the same stamps and the sink's `_spark_metadata` log skips
     * a committed batch. A source that brings its own `ts` (a backfill)
     * composes [[DedupStream.dropDuplicateReadings]] before `start`.
+    *
+    * Read `entryDir` in place. The sink's `_spark_metadata` log records
+    * absolute file paths, so a copy of the directory reads the
+    * original's files, not its own, and once a query appends to the copy
+    * its log spans two roots and the read fails with
+    * `CONFLICTING_DIRECTORY_STRUCTURES`. Drop `_spark_metadata` from the
+    * copy and it reads as plain partitioned parquet with the same rows
+    * (as long as the copy holds only committed files).
     *
     * `compactLog = true` switches the sink to the COMPACT-LOG shape:
     * one file per micro-batch (coalesce(1)), no sensor partitioning.
@@ -122,9 +133,10 @@ object AnalysisStream {
     }
   }
 
-  /** Start the analysis stream over a typed entry stream. Emits to the
-    * analysis table (append, exactly-once via checkpoint) and refreshes
-    * the serving snapshot in the same micro-batch. */
+  /** Start the analysis stream over a typed entry stream. Each
+    * micro-batch refreshes the serving snapshot and then writes the
+    * analysis table (exactly-once via checkpoint), both on the stream
+    * thread; see [[pipeline]] for what a failed write leaves behind. */
   def start(
       entryStream: Dataset[Entry],
       analysisDir: String,
@@ -151,8 +163,9 @@ object AnalysisStream {
     * Idempotent under foreachBatch's at-least-once replay: a restarted
     * batch re-merges identical rows, and MERGE by key is content-
     * idempotent (TxLogSpec); a re-analysis of the same (sensor, ts)
-    * snapshot is last-write-wins, exactly the CQL semantics. Both
-    * streams may feed [[SnapshotStore]]: it keeps the newer `ts` per
+    * snapshot is last-write-wins, exactly the CQL semantics. As in
+    * [[start]], the snapshot is refreshed before the MERGE ([[pipeline]]).
+    * Both streams may feed [[SnapshotStore]]: it keeps the newer `ts` per
     * sensor, so the slower stream cannot regress a served reading. */
   def startTx(
       entryStream: Dataset[Entry],
@@ -168,7 +181,22 @@ object AnalysisStream {
     }
 
   /** The one analysis chain both sinks share: per-sensor window state →
-    * one bounded collect per micro-batch → `sink` → [[SnapshotStore]].
+    * one bounded collect per micro-batch → [[SnapshotStore]] → `sink`.
+    *
+    * Serve, then store (the reference's order, HistoryWriter.scala:
+    * 80-101): a served reading waits for the state stage and the collect,
+    * not for the history write. The write stays in the same micro-batch
+    * on the stream thread, so storage stays exactly-once and the
+    * checkpoint and batch pacing are unchanged. What a failure leaves:
+    *  - a process crash loses the snapshot (it is process-local) under
+    *    either order;
+    *  - if `sink` throws, the query stops and the snapshot may already
+    *    serve that batch's metas, one batch ahead of the analysis table;
+    *  - on restart the batch replays from the checkpointed state with the
+    *    same (name, ts): the snapshot replaces an equal `ts` with the same
+    *    meta, and `sink` overwrites or re-merges the batch.
+    * So a served reading runs ahead of the history by at most the batch
+    * in flight and never goes back to an older reading.
     *
     * ONE collect, then local writes: the batch is bounded by ≤ one row
     * per sensor per micro-batch (sensor count is a config dimension, not
@@ -202,8 +230,8 @@ object AnalysisStream {
       .foreachBatch { (batch: Dataset[SensorMeta], batchId: Long) =>
         val metas = batch.collect().toSeq
         if (metas.nonEmpty) {
-          sink(spark, metas, batchId)
           SnapshotStore.update(metas)
+          sink(spark, metas, batchId)
         }
       }
       .trigger(trigger)

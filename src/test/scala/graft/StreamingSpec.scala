@@ -1,11 +1,14 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.core.{Entry, Heuristic, MqttEntry}
 import graft.streaming.{AnalysisStream, DedupStream, IngestStream, SnapshotStore}
@@ -314,6 +317,94 @@ class StreamingSpec extends SparkSpecBase {
     // sensor a: one live row per emitted head ts (1 and 2), not an
     // append trail of the redelivery
     hist.filter($"name" === "a").count() shouldBe 2
+  }
+
+  /** Serve, then store, on the sink-failure path: the history path sits
+    * under a regular file, so the first batch's sink throws and stops the
+    * query after the snapshot already serves that batch. A restart on the
+    * same checkpoint, with the file gone, replays the batch to the same
+    * metas and one history row per (name, ts). */
+  private def sinkFailureReplays(
+      start: (Dataset[Entry], String, String) => StreamingQuery,
+      history: String => DataFrame): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    SnapshotStore.clear()
+    val source = MemoryStream[Entry]
+    val dir = tmp("graft-sinkfail")
+    val blocker = new File(dir, "blocker")
+    blocker.createNewFile() shouldBe true
+    val table = s"$blocker/analysis"
+    val ckpt = s"$dir/ckpt"
+    def ts(s: Long) = new Timestamp(s * 1000L)
+    source.addData(
+      Entry("a", ts(1), 1.0, 0), Entry("a", ts(2), 4.0, 0),
+      Entry("b", ts(0), 7.0, 0), Entry("b", ts(1), 5.0, 0))
+    val q1 = start(source.toDS(), table, ckpt)
+    val err = intercept[StreamingQueryException](q1.processAllAvailable())
+    q1.isActive shouldBe false
+    q1.exception shouldBe Some(err)
+    Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(blocker.getName)) shouldBe true
+    val served = SnapshotStore.all
+    served.map(m => m.name -> m.ts) shouldBe Seq("a" -> ts(2), "b" -> ts(1))
+
+    blocker.delete() shouldBe true
+    val q2 = start(source.toDS(), table, ckpt)
+    try q2.processAllAvailable() finally q2.stop()
+    SnapshotStore.all shouldBe served
+    history(table).select($"name", $"ts").as[(String, Timestamp)].collect()
+      .sortBy(_._1).toSeq shouldBe served.map(m => m.name -> m.ts)
+    SnapshotStore.clear()
+  }
+
+  test("a failed history write leaves its batch served; the restart stores it once (start)") {
+    sinkFailureReplays(
+      (ds, dir, ckpt) => AnalysisStream.start(ds, dir, ckpt, recentN = 3,
+        trigger = Trigger.ProcessingTime(0)),
+      dir => spark.read.parquet(dir))
+  }
+
+  test("a failed history MERGE leaves its batch served; the restart stores it once (startTx)") {
+    sinkFailureReplays(
+      (ds, table, ckpt) => AnalysisStream.startTx(ds, table, ckpt, recentN = 3,
+        trigger = Trigger.ProcessingTime(0)),
+      table => graft.sources.TxLog.read(spark, table))
+  }
+
+  test("a copied entry directory reads the same rows once its _spark_metadata is dropped") {
+    import graft.sources.broker.{Broker, BrokerSourceProvider}
+    Broker.clear()
+    def resume(dir: String, ckpt: String): Unit = {
+      val q = IngestStream.start(
+        spark.readStream.format(classOf[BrokerSourceProvider].getName).load(),
+        dir, ckpt, Trigger.ProcessingTime(0))
+      try q.processAllAvailable() finally q.stop()
+    }
+    def copyTree(from: String, to: File): String = {
+      FileUtils.copyDirectory(new File(from), to)
+      to.toString
+    }
+    def rows(dir: String) = spark.read.parquet(dir)
+      .select($"sensor", $"ts", $"value", $"anomaly").as[(String, Timestamp, Double, Int)]
+      .collect().sortBy(r => (r._1, r._2.getTime)).toSeq
+    val (entries, ckpt) = (tmp("graft-copy-entry"), tmp("graft-copy-ckpt"))
+    Broker.publish((1 to 2).flatMap(b =>
+      Seq(MqttEntry("s1", b.toDouble, 0), MqttEntry("s2", -b.toDouble, 1))): _*)
+    resume(entries, ckpt)
+    val dest = tmp("graft-copy-dest")
+    val (copy, copyCkpt) = (copyTree(entries, new File(dest, "entries")),
+      copyTree(ckpt, new File(dest, "ckpt")))
+    // the copy's log names the original's absolute file paths
+    spark.read.parquet(copy).inputFiles.foreach(_ should include(entries))
+    // resume both on the next batch: the copy's log now spans two roots
+    Broker.publish(MqttEntry("s1", 3.0, 0), MqttEntry("s2", -3.0, 1))
+    resume(entries, ckpt)
+    resume(copy, copyCkpt)
+    intercept[Exception](rows(copy)).getMessage should include("CONFLICTING_DIRECTORY_STRUCTURES")
+    FileUtils.deleteDirectory(new File(copy, "_spark_metadata"))
+    rows(entries) should have size 6
+    rows(copy) shouldBe rows(entries)
+    Broker.clear()
   }
 
   test("analysis stream blends a live RF scorer (batch layer inside the stream)") {
