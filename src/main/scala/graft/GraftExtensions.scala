@@ -2,46 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarity, DotProduct, DotProductBytes, JaroWinklerSimilarity, PackU8}
+import graft.functions.GraftFunctions
 
 /** Library integration point: register the engine's native expressions
   * into any session via
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`), so
-  * SQL users get `graft_dot`/`graft_cosine` without touching Scala —
-  * the supported way to extend Catalyst from a library. */
+  * SQL users get every function of `GraftFunctions.all` (`graft_dot`,
+  * `graft_cosine`, …) without touching Scala — the supported way to
+  * extend Catalyst from a library. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(clazz: Class[_], name: String, usage: String) =
-    new ExpressionInfo(clazz.getName, null, name, usage, "", "", "", "", "", "", "built-in")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      info(classOf[DotProduct], "graft_dot",
-        "graft_dot(a, b) - dot product of two array<double> vectors"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      info(classOf[CosineSimilarity], "graft_cosine",
-        "graft_cosine(a, b) - cosine similarity of two array<double> vectors"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pack_u8"),
-      info(classOf[PackU8], "graft_pack_u8",
-        "graft_pack_u8(a) - pack an array<int> of 0..255 codes into binary"),
-      (exprs: Seq[Expression]) => PackU8(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      info(classOf[JaroWinklerSimilarity], "graft_jaro_winkler",
-        "graft_jaro_winkler(a, b) - Jaro-Winkler similarity of two strings"),
-      (exprs: Seq[Expression]) => JaroWinklerSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_u8"),
-      info(classOf[DotProductBytes], "graft_dot_u8",
-        "graft_dot_u8(codes, v) - dot of packed u8 codes against array<double>"),
-      (exprs: Seq[Expression]) => DotProductBytes(exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
 }

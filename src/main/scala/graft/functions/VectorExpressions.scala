@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -758,46 +759,63 @@ case class ByteEntropyStats(child: Expression)
 }
 
 /** SQL registration so call sites can use `expr("graft_dot(a, b)")` —
-  * portable across the Column-API refactors of Spark 4. Idempotent. */
+  * portable across the Column-API refactors of Spark 4. [[all]] is the
+  * one table of the engine's SQL functions: [[register]] adds it to a
+  * live session, `graft.GraftExtensions` injects it through
+  * `spark.sql.extensions`. */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_pack_u8", exprs => PackU8(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_dot_u8", exprs => DotProductBytes(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", exprs => JaroWinklerSimilarity(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_intersect_count_sorted",
-      exprs => IntersectCountSorted(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_byte_entropy", exprs => ByteEntropyStats(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_cell_scores", exprs => CellScores(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_pq_codes", exprs => PqCodes(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_band_buckets",
-      exprs => BandBuckets(exprs(0), exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_record_stamp", {
+  /** One SQL function: its name, its `DESCRIBE FUNCTION` usage and its
+    * builder. */
+  final case class Fn(name: String, usage: String, build: Seq[Expression] => Expression) {
+    val info: ExpressionInfo =
+      new ExpressionInfo(build.getClass.getCanonicalName, null, name, usage,
+        "", "", "", "", "", "", "built-in")
+  }
+
+  val all: Seq[Fn] = Seq(
+    Fn("graft_dot", "graft_dot(a, b) - dot product of two array<double> vectors",
+      e => DotProduct(e(0), e(1))),
+    Fn("graft_cosine", "graft_cosine(a, b) - cosine similarity of two array<double> vectors",
+      e => CosineSimilarity(e(0), e(1))),
+    Fn("graft_pack_u8", "graft_pack_u8(a) - pack an array<int> of 0..255 codes into binary",
+      e => PackU8(e(0))),
+    Fn("graft_dot_u8", "graft_dot_u8(codes, v) - dot of packed u8 codes against array<double>",
+      e => DotProductBytes(e(0), e(1))),
+    Fn("graft_jaro_winkler", "graft_jaro_winkler(a, b) - Jaro-Winkler similarity of two strings",
+      e => JaroWinklerSimilarity(e(0), e(1))),
+    Fn("graft_intersect_count_sorted",
+      "graft_intersect_count_sorted(a, b) - |a ∩ b| of two ascending arrays",
+      e => IntersectCountSorted(e(0), e(1))),
+    Fn("graft_byte_entropy",
+      "graft_byte_entropy(bin) - [distinct bytes, Σ c·ln c] of the byte histogram",
+      e => ByteEntropyStats(e(0))),
+    Fn("graft_cell_scores",
+      "graft_cell_scores(v, flatCentroids) - rounded dot of v against every centroid",
+      e => CellScores(e(0), e(1))),
+    Fn("graft_pq_codes", "graft_pq_codes(v, codebooks) - product-quantizer codes of v",
+      e => PqCodes(e(0), e(1))),
+    Fn("graft_band_buckets",
+      "graft_band_buckets(v, flatPlanes, bandBits) - banded sign-hash bucket ids of v",
+      e => BandBuckets(e(0), e(1), e(2))),
+    Fn("graft_record_stamp",
+      "graft_record_stamp(baseMicros) - unique consume-time stamp in microseconds", {
         case Seq(base) => RecordStamp(base)
         case exprs => throw new IllegalArgumentException(
           s"graft_record_stamp(baseMicros) takes exactly 1 argument, got ${exprs.length}")
-      }, "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bloom_build", {
+      }),
+    Fn("graft_bloom_build",
+      "graft_bloom_build(xxhash64Col, estItems, numBits) - serialized Bloom filter aggregate", {
         case Seq(child, est, bits) =>
           new org.apache.spark.sql.catalyst.expressions.aggregate
             .BloomFilterAggregate(child, est, bits)
         case exprs => throw new IllegalArgumentException(
           s"graft_bloom_build(xxhash64Col, estItems, numBits) takes 3 arguments, got ${exprs.length}")
-      }, "built-in")
+      }))
+
+  /** Register every function of [[all]] in `spark`'s session. Idempotent. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    all.foreach(f => registry.registerFunction(FunctionIdentifier(f.name), f.info, f.build))
   }
 
   /** Register `name(xxhash64Col)` as a might-contain probe against a

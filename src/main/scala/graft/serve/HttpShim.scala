@@ -25,8 +25,9 @@ import graft.streaming.{ProducerSim, Serving}
   *
   * Analysis/history come in as functions so the shim stays a pure
   * transport layer: the Spark pipelines behind them are tested on their
-  * own; swap in anything. The executor is a SMALL BOUNDED pool (the
-  * reference endpoint is an actor system — concurrent by construction):
+  * own; swap in anything. The executor is a SMALL BOUNDED pool of 8
+  * threads (the reference endpoint is an actor system — concurrent by
+  * construction):
   * round-7's ServeSoak showed a single-threaded dispatcher serializing
   * sub-millisecond `/stress` snapshot reads behind multi-second `/`
   * full recomputes (stress p99 13.3 s vs its own 0.9 ms p50), which
@@ -35,8 +36,7 @@ import graft.streaming.{ProducerSim, Serving}
 final class HttpShim(
     fullAnalyze: () => Seq[SensorMeta],
     history: Int => Seq[SensorMeta],
-    port: Int = 0,
-    serverThreads: Int = 8) {
+    port: Int = 0) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
@@ -98,7 +98,7 @@ final class HttpShim(
         respond(ex, 400, s"""{"error":"${Serving.esc(e.getMessage)}"}""")
     })
 
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(serverThreads)
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
 
   def start(): Int = {
     server.setExecutor(pool)

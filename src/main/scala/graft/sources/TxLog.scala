@@ -429,23 +429,12 @@ object TxLog {
       }.toSeq
   }
 
-  // Log (de)serialization: hand-rolled JSON writing + Jackson reading
-  // (Jackson rides on Spark's classpath) — no new dependencies.
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  // Log (de)serialization: Jackson with its Scala module (both ride on
+  // Spark's classpath) maps a Commit to and from its JSON document.
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
   private def commit(table: String, c: Commit): Unit = {
-    val adds = c.adds.map(a =>
-      s"""{"path":${jstr(a.path)},"rows":${a.rows},""" +
-        s""""minKey":${jstr(a.minKey)},"maxKey":${jstr(a.maxKey)}}""")
-      .mkString("[", ",", "]")
-    val removes = c.removes.map(jstr).mkString("[", ",", "]")
-    val doc = s"""{"version":${c.version},"adds":$adds,"removes":$removes}"""
     val target = logDir(table).resolve(f"${c.version}%08d.json")
     // Claim the version via hard link, NOT rename: link(2) fails EEXIST
     // atomically when the target exists, whereas an atomic rename would
@@ -454,7 +443,7 @@ object TxLog {
     // written first, so the linked entry is complete the instant it
     // becomes visible.
     val tmp = logDir(table).resolve(s".${UUID.randomUUID()}.tmp")
-    Files.write(tmp, doc.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, mapper.writeValueAsBytes(c))
     try Files.createLink(target, tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -497,21 +486,12 @@ object TxLog {
   }
 
   private def listCommits(dir: Path): Seq[Commit] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val listing = Files.list(dir)
     val entries =
       try listing.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".json")).toSeq
       finally listing.close()
     entries.sortBy(_.getFileName.toString)
-      .map { p =>
-        val n = mapper.readTree(Files.readAllBytes(p))
-        Commit(
-          n.get("version").asLong(),
-          n.get("adds").elements().asScala.map(a => AddFile(
-            a.get("path").asText(), a.get("rows").asLong(),
-            a.get("minKey").asText(), a.get("maxKey").asText())).toSeq,
-          n.get("removes").elements().asScala.map(_.asText()).toSeq)
-      }
+      .map(p => mapper.readValue(Files.readAllBytes(p), classOf[Commit]))
   }
 }

@@ -287,6 +287,29 @@ class CompactorSpec extends SparkSpecBase {
     q.stop()
   }
 
+  test("a ']' in the compacted dir's name survives a restart with every row") {
+    // the marker holds the tick dirs' full paths, so a restart must read
+    // back any character the compacted dir's name holds: a lost tick dir
+    // is reclaimed at load and its rows drop out of read()
+    val entryDir = tmp("graft-bentry")
+    val compDir = tmp("graft-comp]")
+    val q = ingest(entryDir, tmp("graft-bckpt"))
+    def batch(b: Int): Unit = {
+      Broker.publish((1 to 5).map(i => MqttEntry(s"s$i", b * 10.0 + i, 0)): _*)
+      q.processAllAvailable()
+    }
+    val c1 = new EntryLogCompactor(spark, entryDir, compDir)
+    batch(1); c1.tick()
+    batch(2); c1.tick()
+    val c2 = new EntryLogCompactor(spark, entryDir, compDir)
+    c2.reclaimedDirs.get() shouldBe 0L
+    batch(3); c2.tick()
+    val raw = rowSet(spark.read.parquet(entryDir))
+    raw should have size 15
+    rowSet(c2.read()) shouldBe raw
+    q.stop()
+  }
+
   test("per-sensor point reads prune partitions on the folded bulk") {
     // the layoutPartitionBy promise: the raw sink writes one compact
     // file per micro-batch (write-fast), the fold applies the

@@ -24,6 +24,8 @@ class ExtensionsSpec extends SparkSpecBase {
       val cos = s2.sql(
         "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").head().getDouble(0)
       cos shouldBe 1.0
+      s2.sql("SELECT graft_intersect_count_sorted(array(1, 2, 3), array(2, 3, 4))")
+        .head().getLong(0) shouldBe 2L
       s2.sql("DESCRIBE FUNCTION graft_dot").collect()
         .map(_.getString(0)).mkString("\n") should include("graft_dot")
     } finally {
