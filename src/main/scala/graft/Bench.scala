@@ -164,12 +164,7 @@ object Bench {
     // keys must be JSON-escaped: memo keys carry arbitrary bytes (the
     // bm25 per-term-set keys join terms with NUL separators), and one
     // raw control char invalidates the whole detail file
-    def jkey(k: String): String = "\"" + k.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def jkey(k: String): String = "\"" + streaming.Serving.esc(k) + "\""
     def qsJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => jkey(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

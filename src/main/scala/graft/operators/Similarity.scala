@@ -292,18 +292,18 @@ object Similarity extends DetRounding {
       withNorm(Tables.embeddings(spark, dir))
     }
 
-  /** Parameterized vector search — the library entry point generalizing
-    * the catalog's fixed-shape queries ([[Graft.vectorSearch]]):
-    * `probes = nlist` degenerates to brute force over all cells,
-    * `probes = 1/2` (at the default nlist = 16) is q41/q88,
-    * `quantizedScoring = true` is the q96 path (ADC over the packed
-    * index, exact rerank of a 2k shortlist). `nlist` opens the cell
-    * count — the nlist ∝ √N scale rule end to end (assignment AND
-    * search; [[assignCells]] is the assignment half): at any nlist the
-    * same prefix-seeded centroid geometry applies and exhaustive
-    * probing provably recovers brute results (ApiSpec locks it at 16
-    * and 64). Same determinism contract as the catalog: rounded
-    * rankings, id tiebreaks, first-max cell ties. */
+  /** Parameterized IVF vector search ([[Graft.vectorSearch]]) and the
+    * one body of the catalog's IVF rows: q41/q88 are `probes = 1/2` at
+    * the default nlist = 16, q96 adds `quantizedScoring = true` (ADC
+    * over the packed index, exact rerank of a 2k shortlist), q205/q214
+    * read it at several probe counts and q221 at nlist = 64.
+    * `probes = nlist` degenerates to brute force over all cells. `nlist`
+    * opens the cell count — the nlist ∝ √N scale rule end to end
+    * (assignment AND search; [[assignCells]] is the assignment half): at
+    * any nlist the same prefix-seeded centroid geometry applies and
+    * exhaustive probing provably recovers brute results (ApiSpec locks
+    * it at 16 and 64). Same determinism contract as the catalog: rounded
+    * rankings ([[topK]]), id tiebreaks, first-max cell ties. */
   private[graft] def vectorSearch(spark: SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 5, probes: Int = 1,
       quantizedScoring: Boolean = false, nlist: Int = NClusters): DataFrame = {
@@ -320,40 +320,67 @@ object Similarity extends DetRounding {
       .withColumn("pr", row_number().over(wp))
       .filter($"pr" <= probes)
       .select($"query_id", $"qv", $"qnrm", $"qsum", $"j".cast("int").as("cluster"))
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val we = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
     if (!quantizedScoring) {
-      assigned.select($"vec_id", $"v", $"nrm", $"cluster")
+      val cand = assigned.select($"vec_id", $"v", $"nrm", $"cluster")
         .join(broadcast(queries), Seq("cluster"))
         .filter($"vec_id" =!= $"query_id")
-        .withColumn("rn", row_number().over(we))
-        .filter($"rn" <= k)
+      topK(cand, "query_id", queryCos, k)
         .select($"query_id", $"cluster", $"vec_id".as("neighbor_id"),
-          round(cos, 4).as("cosine"), $"rn")
+          round(queryCos, 4).as("cosine"), $"rn")
         .orderBy($"query_id", $"rn")
     } else {
       val cand = assigned.select($"vec_id", $"cluster")
         .join(quantized(spark, dir), Seq("vec_id"))
-      val approx = ($"vmin" * $"qsum" + ($"span" / 255.0) * expr("graft_dot_u8(codes, qv)")) /
-        ($"qnrm" * $"rnrm")
-      val wa = Window.partitionBy($"query_id").orderBy(round(approx, 6).desc, $"vec_id".asc)
-      val shortlist = cand.join(broadcast(queries), Seq("cluster"))
+        .join(broadcast(queries), Seq("cluster"))
         .filter($"vec_id" =!= $"query_id")
-        .withColumn("approx_cosine", round(approx, 4))
-        .withColumn("ra", row_number().over(wa))
-        .filter($"ra" <= 2 * k)
-        .select($"query_id", $"cluster", $"qv", $"qnrm", $"vec_id", $"approx_cosine")
-      shortlist.join(e.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-        .withColumn("rn", row_number().over(we))
-        .filter($"rn" <= k)
-        .select($"query_id", $"cluster", $"vec_id".as("neighbor_id"), $"approx_cosine",
-          round(cos, 4).as("cosine"), $"rn")
-        .orderBy($"query_id", $"rn")
+      shortlistRerank(e, cand, sq8Cos, depth = 2 * k, k, carry = Seq("cluster"))
     }
+  }
+
+  /** THE neighbour-ranking rule every top-k in this file shares: within
+    * each `key` partition, `row_number` over `score` rounded to 6 dp
+    * descending, then `vec_id` ascending, kept while it is ≤ k. The
+    * rounding keeps ulp-level drift from reordering neighbours between
+    * engines; callers emit their cosines at 4 dp. The rank lands in
+    * column `rank`. */
+  private def topK(df: DataFrame, key: String, score: Column, k: Int,
+      rank: String = "rn"): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col(key)).orderBy(round(score, 6).desc, col("vec_id").asc)))
+      .filter(col(rank) <= k)
+
+  /** Shortlist → exact rerank, the refine step of q83, q157 and
+    * [[vectorSearch]]'s quantized branch: per query the `depth` best
+    * candidates by `approx` (emitted at 4 dp as `approx_cosine`) are
+    * re-scored against their full vectors in `e` and cut to the k best.
+    * `cand` carries query_id, qv, qnrm, vec_id and the `carry` columns
+    * the output keeps after query_id. */
+  private def shortlistRerank(e: DataFrame, cand: DataFrame, approx: Column,
+      depth: Int, k: Int, carry: Seq[String] = Nil): DataFrame = {
+    val keys = ("query_id" +: carry).map(col)
+    val shortlist = topK(cand.withColumn("approx_cosine", round(approx, 4)),
+        "query_id", approx, depth, rank = "ra")
+      .select(keys ++ Seq(col("qv"), col("qnrm"), col("vec_id"), col("approx_cosine")): _*)
+    topK(shortlist.join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id")),
+        "query_id", queryCos, k)
+      .select(keys ++ Seq(col("vec_id").as("neighbor_id"), col("approx_cosine"),
+        round(queryCos, 4).as("cosine"), col("rn")): _*)
+      .orderBy(col("query_id"), col("rn"))
   }
 
   /** Native fused dot product over two array<double> columns (by name). */
   private def dot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
+
+  /** Exact cosine of a query row (`qv`, `qnrm`) against a corpus row
+    * (`v`, `nrm`). */
+  private def queryCos: Column = dot("qv", "v") / (col("qnrm") * col("nrm"))
+
+  /** SQ8 asymmetric cosine of a query row (`qv`, `qnrm`, `qsum`) against
+    * a packed [[quantized]] row: `dot(q, dequant(c)) = vmin·Σqᵢ +
+    * (span/255)·Σ qᵢcᵢ` over the packed bytes. */
+  private def sq8Cos: Column =
+    (col("vmin") * col("qsum") + (col("span") / 255.0) * expr("graft_dot_u8(codes, qv)")) /
+      (col("qnrm") * col("rnrm"))
 
   /** Fused dot of column `vcol` with a ±1 literal vector (single
     * Literal node — the [[cellScoresFor]] parse-cost discipline). */
@@ -865,12 +892,8 @@ object Similarity extends DetRounding {
     val e = embNorm(spark, dir)
     val queries = e.filter($"vec_id".isin(QueryIds: _*))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    e.join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 10)
-      .select($"query_id", $"vec_id".as("neighbor_id"), round(cos, 4).as("cosine"), $"rn")
+    topK(e.join(broadcast(queries), $"vec_id" =!= $"query_id"), "query_id", queryCos, 10)
+      .select($"query_id", $"vec_id".as("neighbor_id"), round(queryCos, 4).as("cosine"), $"rn")
       .orderBy($"query_id", $"rn")
   }
 
@@ -908,14 +931,11 @@ object Similarity extends DetRounding {
     val e = bucketed(spark, dir)
     val queries = e.filter($"vec_id".isin(QueryIds: _*))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"), $"bucket")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    e.join(broadcast(queries), Seq("bucket"))
+    val cand = e.join(broadcast(queries), Seq("bucket"))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
+    topK(cand, "query_id", queryCos, 5)
       .select($"query_id", $"bucket", $"vec_id".as("neighbor_id"),
-        round(cos, 4).as("cosine"), $"rn")
+        round(queryCos, 4).as("cosine"), $"rn")
       .orderBy($"query_id", $"rn")
   }
 
@@ -953,28 +973,11 @@ object Similarity extends DetRounding {
     * shape. No model fit anywhere: the "index build" is a scan-speed
     * projection, which also makes assignment portable column algebra →
     * fully oracle-checked (the round-1 KMeans form was neither: 13 s of
-    * in-query fit and unportable seeded assignments). */
-  private def q41(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = embNorm(spark, dir)
-    val arr = cellScores
-    // array_position is 1-based and returns the FIRST occurrence of the
-    // max — the deterministic lowest-j tiebreak
-    val assigned = e
-      .withColumn("cluster", cellFromScores(arr))
-      .select($"vec_id", $"v", $"nrm", $"cluster")
-    val queries = assigned.filter($"vec_id".isin(QueryIds: _*))
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"), $"cluster")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    assigned.join(broadcast(queries), Seq("cluster"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
-      .select($"query_id", $"cluster", $"vec_id".as("neighbor_id"),
-        round(cos, 4).as("cosine"), $"rn")
-      .orderBy($"query_id", $"rn")
-  }
+    * in-query fit and unportable seeded assignments). Runs
+    * [[vectorSearch]] at one probe; the DuckDB oracle below is its
+    * independent check. */
+  private def q41(spark: SparkSession, dir: String): DataFrame =
+    vectorSearch(spark, dir, QueryIds, k = 5, probes = 1)
 
   private val q41Sql: String =
     s"""WITH $normsCte, cents AS (
@@ -1016,37 +1019,26 @@ object Similarity extends DetRounding {
     * Everything is a set intersection of two DETERMINISTIC top-5 lists
     * (both ranked on 6-dp-rounded cosine with id tiebreaks — the
     * ladder's shared ordering discipline), so counts are exact
-    * integers and recall is one divide by 5. Shape: the exact side is
-    * q29's broadcast-queries scan; the approx side is q41's
-    * cluster-keyed equi-join; the audit joins two 25-row frames. */
+    * integers and recall is one divide by 5. Both lists come from
+    * [[vectorSearch]] (as in q214): the exact side probes all 16 cells,
+    * which is brute force, and the approx side probes one; the audit
+    * joins two 25-row frames. */
   private def q205(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = embNorm(spark, dir)
-    val assigned = e.withColumn("cluster", cellFromScores(cellScores))
-      .select($"vec_id", $"v", $"nrm", $"cluster")
-    val queries = assigned.filter($"vec_id".isin(QueryIds: _*))
-      .select($"vec_id".as("query_id"), $"v".as("qv"),
-        $"nrm".as("qnrm"), $"cluster")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    val exact5 = e.join(broadcast(
-        queries.select($"query_id", $"qv", $"qnrm")), lit(true))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
-      .select($"query_id", $"vec_id".as("neighbor_id"))
-    val approx5 = assigned.join(broadcast(queries), Seq("cluster"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
-      .select($"query_id", $"vec_id".as("neighbor_id"))
+    val assigned = embNorm(spark, dir).withColumn("cluster", cellCol)
+    val exact5 = vectorSearch(spark, dir, QueryIds, k = 5, probes = NClusters)
+      .select($"query_id", $"neighbor_id")
+    val approx5 = vectorSearch(spark, dir, QueryIds, k = 5, probes = 1)
+      .select($"query_id", $"neighbor_id")
     val probed = assigned.groupBy($"cluster").agg(count(lit(1)).as("csz"))
     val hits = exact5
       .join(approx5.withColumn("hit", lit(1L)),
         Seq("query_id", "neighbor_id"), "left_outer")
       .groupBy($"query_id")
       .agg(sum(coalesce($"hit", lit(0L))).as("n_hit"))
-    queries.join(broadcast(probed), Seq("cluster"))
+    assigned.filter($"vec_id".isin(QueryIds: _*))
+      .select($"vec_id".as("query_id"), $"cluster")
+      .join(broadcast(probed), Seq("cluster"))
       .join(hits, Seq("query_id"))
       .select($"query_id", ($"csz" - 1).as("n_probed"), $"n_hit",
         ($"n_hit".cast("double") / 5.0).as("recall_at_5"))
@@ -1275,13 +1267,9 @@ object Similarity extends DetRounding {
     val cand = e.join(eligible, Seq("vec_id"), "left_semi")
     val queries = e.filter($"vec_id".isin(QueryIds: _*))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    cand.join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
+    topK(cand.join(broadcast(queries), $"vec_id" =!= $"query_id"), "query_id", queryCos, 5)
       .select($"query_id", $"vec_id".as("neighbor_id"),
-        round(cos, 4).as("cosine"), $"rn")
+        round(queryCos, 4).as("cosine"), $"rn")
       .orderBy($"query_id", $"rn")
   }
 
@@ -1455,22 +1443,8 @@ object Similarity extends DetRounding {
     val queries = e.filter($"vec_id".isin(QueryIds: _*))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
         aggregate($"v", lit(0.0), (acc, x) => acc + x).as("qsum"))
-    val approx = ($"vmin" * $"qsum" + ($"span" / 255.0) * expr("graft_dot_u8(codes, qv)")) /
-      ($"qnrm" * $"rnrm")
-    val wa = Window.partitionBy($"query_id").orderBy(round(approx, 6).desc, $"vec_id".asc)
-    val shortlist = sq.join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("approx_cosine", round(approx, 4))
-      .withColumn("ra", row_number().over(wa))
-      .filter($"ra" <= 20)
-      .select($"query_id", $"qv", $"qnrm", $"vec_id", $"approx_cosine")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val we = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    shortlist.join(e.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .withColumn("rn", row_number().over(we))
-      .filter($"rn" <= 5)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine",
-        round(cos, 4).as("cosine"), $"rn")
-      .orderBy($"query_id", $"rn")
+    shortlistRerank(e, sq.join(broadcast(queries), $"vec_id" =!= $"query_id"),
+      sq8Cos, depth = 20, k = 5)
   }
 
   private val q83Sql: String =
@@ -1709,20 +1683,8 @@ object Similarity extends DetRounding {
     val adc = expr(
       s"aggregate(sequence(0, ${PqM - 1}), cast(0 as double), (acc, j) -> " +
         "acc + lut[j][codes[j]])") / ($"qnrm" * $"pqnrm")
-    val wa = Window.partitionBy($"query_id").orderBy(round(adc, 6).desc, $"vec_id".asc)
-    val shortlisted = pq.join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("approx_cosine", round(adc, 4))
-      .withColumn("ra", row_number().over(wa))
-      .filter($"ra" <= shortlist)
-      .select($"query_id", $"qv", $"qnrm", $"vec_id", $"approx_cosine")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val we = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    shortlisted.join(e.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .withColumn("rn", row_number().over(we))
-      .filter($"rn" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine",
-        round(cos, 4).as("cosine"), $"rn")
-      .orderBy($"query_id", $"rn")
+    shortlistRerank(e, pq.join(broadcast(queries), $"vec_id" =!= $"query_id"),
+      adc, depth = shortlist, k)
   }
 
   /** Oracle CTE pair: encode every vector against codebook `cb` →
@@ -1831,36 +1793,11 @@ object Similarity extends DetRounding {
     * is IDENTICAL to single-probe — which is why multi-probe is the
     * production default for IVF indexes.
     *
-    * The runner-up cell is computed by masking the argmax out of the
-    * per-cell score array and taking argmax again — pure column
-    * algebra, deterministic (scores rounded 6 dp, ties to the lowest
-    * cell id), no sort over the 16-wide array. */
-  private def q88(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = embNorm(spark, dir)
-    val arr = cellScores
-    val assigned = e
-      .withColumn("cluster", cellFromScores(arr))
-      .select($"vec_id", $"v", $"nrm", $"cluster")
-    // queries probe their best AND runner-up cells
-    val masked = zip_with(arr, sequence(lit(0), lit(NClusters - 1)),
-      (s, j) => when(j === cellFromScores(arr), lit(-1e9))
-        .otherwise(s))
-    val queries = e.filter($"vec_id".isin(QueryIds: _*))
-      .withColumn("probe1", cellFromScores(arr))
-      .withColumn("probe2", cellFromScores(masked))
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
-        explode(array($"probe1", $"probe2")).as("cluster"))
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    assigned.join(broadcast(queries), Seq("cluster"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
-      .select($"query_id", $"cluster", $"vec_id".as("neighbor_id"),
-        round(cos, 4).as("cosine"), $"rn")
-      .orderBy($"query_id", $"rn")
-  }
+    * The probed cells are the query's two best rounded centroid scores,
+    * ties to the lowest cell id. Runs [[vectorSearch]] at two probes;
+    * the DuckDB oracle below is its independent check. */
+  private def q88(spark: SparkSession, dir: String): DataFrame =
+    vectorSearch(spark, dir, QueryIds, k = 5, probes = 2)
 
   private val q88Sql: String =
     s"""WITH $normsCte, cents AS (
@@ -1959,43 +1896,10 @@ object Similarity extends DetRounding {
     * rows per query.
     *
     * Every stage reuses the session's persisted artifacts (norms,
-    * packed codes) and the deterministic centroid/probe algebra that
-    * q41/q88 lock in PlanSpec — composition adds no new state. */
-  private def q96(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = embNorm(spark, dir)
-    val arr = cellScores
-    val cellOf = cellFromScores(arr)
-    // quantized candidates carry their cell id: equi-join of the two
-    // memoized tables on vec_id (co-partitioned at scale)
-    val cand = e.withColumn("cluster", cellOf).select($"vec_id", $"cluster")
-      .join(quantized(spark, dir), Seq("vec_id"))
-    val masked = zip_with(arr, sequence(lit(0), lit(NClusters - 1)),
-      (s, j) => when(j === cellOf, lit(-1e9)).otherwise(s))
-    val queries = e.filter($"vec_id".isin(QueryIds: _*))
-      .withColumn("probe1", cellOf)
-      .withColumn("probe2", cellFromScores(masked))
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
-        aggregate($"v", lit(0.0), (acc, x) => acc + x).as("qsum"),
-        explode(array($"probe1", $"probe2")).as("cluster"))
-    val approx = ($"vmin" * $"qsum" + ($"span" / 255.0) * expr("graft_dot_u8(codes, qv)")) /
-      ($"qnrm" * $"rnrm")
-    val wa = Window.partitionBy($"query_id").orderBy(round(approx, 6).desc, $"vec_id".asc)
-    val shortlist = cand.join(broadcast(queries), Seq("cluster"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("approx_cosine", round(approx, 4))
-      .withColumn("ra", row_number().over(wa))
-      .filter($"ra" <= 10)
-      .select($"query_id", $"cluster", $"qv", $"qnrm", $"vec_id", $"approx_cosine")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val we = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    shortlist.join(e.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .withColumn("rn", row_number().over(we))
-      .filter($"rn" <= 5)
-      .select($"query_id", $"cluster", $"vec_id".as("neighbor_id"), $"approx_cosine",
-        round(cos, 4).as("cosine"), $"rn")
-      .orderBy($"query_id", $"rn")
-  }
+    * packed codes): it is [[vectorSearch]] at two probes with quantized
+    * scoring, and the DuckDB oracle below is its independent check. */
+  private def q96(spark: SparkSession, dir: String): DataFrame =
+    vectorSearch(spark, dir, QueryIds, k = 5, probes = 2, quantizedScoring = true)
 
   private val q96Sql: String =
     s"""WITH $normsCte, cents AS (
@@ -2075,13 +1979,9 @@ object Similarity extends DetRounding {
     val queries = e.filter($"vec_id".isin(QueryIds: _*))
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"),
         $"label".as("query_label"))
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val w = Window.partitionBy($"query_id").orderBy(round(cos, 6).desc, $"vec_id".asc)
-    e.join(broadcast(queries), $"label" =!= $"query_label")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
+    topK(e.join(broadcast(queries), $"label" =!= $"query_label"), "query_id", queryCos, 5)
       .select($"query_id", $"query_label", $"vec_id".as("neighbor_id"),
-        $"label".as("neighbor_label"), round(cos, 4).as("cosine"), $"rn")
+        $"label".as("neighbor_label"), round(queryCos, 4).as("cosine"), $"rn")
       .orderBy($"query_id", $"rn")
   }
 
@@ -2326,7 +2226,7 @@ object Similarity extends DetRounding {
     val e = embNorm(spark, dir)
     val q0 = e.filter($"vec_id" === queryId)
       .select($"v".as("qv"), $"nrm".as("qnrm"))
-    val rel6 = round(dot("qv", "v") / ($"qnrm" * $"nrm"), 6)
+    val rel6 = round(queryCos, 6)
     val shortlist = e.crossJoin(broadcast(q0))
       .filter($"vec_id" =!= queryId)
       .select($"vec_id", rel6.as("rel"), $"v", $"nrm")
@@ -2476,10 +2376,7 @@ object Similarity extends DetRounding {
       .join(nb.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
       .join(excl, Seq("anchor", "vec_id"), "left_anti")
     val cos = dot("av", "v") / ($"anrm" * $"nrm")
-    val wneg = Window.partitionBy($"anchor")
-      .orderBy(round(cos, 6).desc, $"vec_id".asc)
-    val negs = cand.withColumn("rn", row_number().over(wneg))
-      .filter($"rn" === 1)
+    val negs = topK(cand, "anchor", cos, 1)
       .select($"anchor", $"vec_id".as("negative"),
         round(cos, 4).as("neg_cosine"))
     pos.join(negs, Seq("anchor"))
@@ -2831,13 +2728,8 @@ object Similarity extends DetRounding {
     val e = embNorm(spark, dir)
     val qv = anchors.join(e.select($"vec_id".as("anchor"),
       $"v".as("av"), $"nrm".as("anrm")), "anchor")
-    val cos = dot("av", "v") / ($"anrm" * $"nrm")
-    val wr = Window.partitionBy($"anchor")
-      .orderBy(round(cos, 6).desc, $"vec_id".asc)
-    val top = e.select($"vec_id", $"v", $"nrm")
-      .join(broadcast(qv), $"vec_id" =!= $"anchor")
-      .withColumn("rank", row_number().over(wr))
-      .filter($"rank" <= EvalK)
+    val cand = e.select($"vec_id", $"v", $"nrm").join(broadcast(qv), $"vec_id" =!= $"anchor")
+    val top = topK(cand, "anchor", dot("av", "v") / ($"anrm" * $"nrm"), EvalK, rank = "rank")
       .select($"anchor", $"vec_id".as("rel_id"), $"rank")
     qrelMetrics(top, rel, anchors, None)
   }
@@ -2962,14 +2854,10 @@ object Similarity extends DetRounding {
     val qprobe = anchorProbes(spark, dir, probes)
     val ncand = qprobe.join(csz, "cluster")
       .groupBy($"anchor").agg((sum($"csz") - lit(1L)).as("n_cand"))
-    val cos = dot("av", "v") / ($"anrm" * $"nrm")
-    val wr = Window.partitionBy($"anchor")
-      .orderBy(round(cos, 6).desc, $"vec_id".asc)
-    val top = assigned.select($"vec_id", $"v", $"nrm", $"cluster")
+    val cand = assigned.select($"vec_id", $"v", $"nrm", $"cluster")
       .join(broadcast(qprobe), Seq("cluster"))
       .filter($"vec_id" =!= $"anchor")
-      .withColumn("rank", row_number().over(wr))
-      .filter($"rank" <= EvalK)
+    val top = topK(cand, "anchor", dot("av", "v") / ($"anrm" * $"nrm"), EvalK, rank = "rank")
       .select($"anchor", $"vec_id".as("rel_id"), $"rank")
     qrelMetrics(top, rel, anchors, Some(ncand))
   }
@@ -3089,7 +2977,7 @@ object Similarity extends DetRounding {
     * [[sqrtNlist]] geometry. Emits (src, vec_id) candidate rows. */
   private val ShortlistMargin = 2e-6
 
-  /** Fixed-k shortlist over every cell member as a source (q218). */
+  /** Fixed-k shortlist over every cell member as a source ([[knnGraph]]). */
   private def cellTopShortlist(nb: DataFrame, k: Int): DataFrame =
     cellShortlistKernel(nb.withColumn("kq", lit(k)))
 
@@ -3288,9 +3176,6 @@ object Similarity extends DetRounding {
           s"nlist=$nlist0 leaves task-hostile cells AND an N²-class pair " +
             s"volume — use nlist ≈ ${sqrtNlist(n)} (the √N rule) instead")
       }
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val wr = Window.partitionBy($"src")
-      .orderBy(round(cos, 6).desc, $"vec_id".asc)
     // candidate scope: the kernel shortlist at sane cell sizes, the
     // distributed all-same-cell-pairs join when the assignment makes
     // cells task-hostile — and a loud refusal when that join's pair
@@ -3307,13 +3192,12 @@ object Similarity extends DetRounding {
         .filter($"src" =!= $"vec_id")
         .select($"src", $"vec_id")
       }
-    cands
+    val scored = cands
       .join(nb.select($"vec_id".as("src"), $"v".as("qv"), $"nrm".as("qnrm")), Seq("src"))
       .join(nb.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .withColumn("rn", row_number().over(wr))
-      .filter($"rn" <= k)
+    topK(scored, "src", queryCos, k)
       .select($"src", $"vec_id".as("neighbor_id"),
-        round(cos, 4).as("cosine"), $"rn".cast("int").as("rn"))
+        round(queryCos, 4).as("cosine"), $"rn".cast("int").as("rn"))
       .orderBy($"src", $"rn")
   }
 
@@ -3370,31 +3254,16 @@ object Similarity extends DetRounding {
     * q29's discipline). Scale: neighbor lists are CELL-LOCAL (the same
     * per-cell window the IVF probe path pays — Σ cellsize², never
     * corpus²) at the √N geometry ([[sqrtNlist]]), so the quadratic is
-    * ~n^1.5 and the per-corpus ratio stays flat as N grows;
-    * contraction to the histogram is two hash aggregates, and the
-    * k = 0 bucket densifies via one anti-join. */
+    * ~n^1.5 and the per-corpus ratio stays flat as N grows. The top-5
+    * lists are [[knnGraph]]'s edges at k = 5 (its per-task shortlist
+    * kernel, re-ranked by the shared rule); contraction to the
+    * histogram is two hash aggregates, and the k = 0 bucket densifies
+    * via one outer join. */
   private def q218(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val nb = embNorm(spark, dir)
-      .withColumn("cluster", cellFromScores(cellScoresFor(corpusNlist(spark, dir))))
-      .select($"vec_id", $"v", $"nrm", $"cluster")
-    val cos = dot("qv", "v") / ($"qnrm" * $"nrm")
-    val wr = Window.partitionBy($"src")
-      .orderBy(round(cos, 6).desc, $"vec_id".asc)
-    // Σ cell² stays inside per-task loops ([[cellTopShortlist]] — the
-    // tiledThresholdPairs discipline applied to the cell-local window):
-    // the kernel emits ~k rows per src instead of shuffling every
-    // same-cell pair into the window sort, and the shortlist is
-    // re-ranked HERE by the same Catalyst expressions as before, so
-    // the oracle-checked ordering never depends on kernel arithmetic.
-    val top5 = cellTopShortlist(nb, k = 5)
-      .join(nb.select($"vec_id".as("src"), $"v".as("qv"), $"nrm".as("qnrm")), Seq("src"))
-      .join(nb.select($"vec_id", $"v", $"nrm"), Seq("vec_id"))
-      .withColumn("rn", row_number().over(wr))
-      .filter($"rn" <= 5)
-      .select($"vec_id")
+    val top5 = knnGraph(spark, dir, k = 5).select($"neighbor_id".as("vec_id"))
     val occ = top5.groupBy($"vec_id").agg(count(lit(1)).as("k_occurrence"))
-    val withZeros = nb.select($"vec_id")
+    val withZeros = embNorm(spark, dir).select($"vec_id")
       .join(occ, Seq("vec_id"), "left_outer")
       .select(coalesce($"k_occurrence", lit(0L)).as("k_occurrence"))
     withZeros.groupBy($"k_occurrence")

@@ -408,6 +408,53 @@ class SimilaritySpec extends SparkSpecBase {
     }
   }
 
+  test("tied neighbours come out in vec_id order with rn = 1..k on every ranking path") {
+    // fixture corpus: query vectors 0-4, six exact copies of each (ids
+    // 5-34, interleaved across queries) and 45 unrelated vectors. A
+    // query and its copies all tie at one cosine, so only the vec_id
+    // tiebreak orders them; rows are written in descending id order so
+    // file order cannot stand in for it
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(17)
+    def vec(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val query = (0L until 5L).map(q => q -> vec()).toMap
+    val copyOf = (5L until 35L).map(id => id -> (id * 2 % 5)).toMap
+    val rows = query.toSeq ++ copyOf.toSeq.map { case (id, q) => id -> query(q) } ++
+      (35L until 80L).map(id => id -> vec())
+    def copies(q: Long): Seq[Long] = copyOf.collect { case (id, `q`) => id }.toSeq.sorted
+    def ranked(df: org.apache.spark.sql.DataFrame, key: String): Map[Long, Seq[(Long, Int)]] =
+      df.select(col(key), $"neighbor_id", $"rn".cast("int")).as[(Long, Long, Int)].collect()
+        .groupBy(_._1).view.mapValues(_.sortBy(_._3).toSeq.map(r => (r._2, r._3))).toMap
+    withTempDir("ties") { dir =>
+      rows.sortBy(-_._1).map { case (id, v) => (id, v, (id % 3).toInt) }
+        .toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      try {
+        val ids = 0L until 5L
+        copies(0L) shouldBe Seq(5L, 10L, 15L, 20L, 25L, 30L)
+        val q29 = ranked(SparkEntry.queries("q29_knn_brute_force")(spark, dir), "query_id")
+        ids.foreach { q =>
+          q29(q).map(_._2) shouldBe (1 to 10)
+          q29(q).take(6).map(_._1) shouldBe copies(q)
+        }
+        def search(probes: Int, quantized: Boolean) = ranked(
+          Graft.vectorSearch(spark, dir, ids, k = 5, probes = probes,
+            quantizedScoring = quantized), "query_id")
+        for ((probes, quantized) <- Seq((1, false), (16, false), (2, true))) {
+          val got = search(probes, quantized)
+          withClue(s"probes=$probes quantized=$quantized: ") {
+            ids.foreach(q => got(q) shouldBe copies(q).take(5).zip(1 to 5))
+          }
+        }
+        val graph = ranked(Graft.knnGraph(spark, dir, k = 5), "src")
+        ids.foreach { q =>
+          val group = (q +: copies(q)).sorted
+          group.foreach(m => graph(m) shouldBe group.filterNot(_ == m).take(5).zip(1 to 5))
+        }
+      } finally graft.core.PersistedMemo.release(spark, dir)
+    }
+  }
+
   test("q213 triplets: positives are near-dups, negatives are cell-local non-dups") {
     val dir = "/root/testdata/sf0.001"
     val trips = SparkEntry.queries("q213_contrastive_triplets")(spark, dir).collect()
